@@ -17,6 +17,14 @@ import graft.operators.{Dedup, Merge}
   * (atomicity per SURVEY §7.4.4). Loads stay sequential on purpose: the
   * reference orders them for FK integrity (§7.4.6); the parallelism lives
   * inside each distributed write, not across them.
+  *
+  * One evaluation per extract: [[load]] persists its source through
+  * [[graft.CacheScope.persist]], so the merge write fills the cache and
+  * the `upserted` count reads it. A [[gc]] whose keep-set is that same
+  * frame (the `sync-app` shape) is served from the same cache by
+  * Spark's cache manager, so a cycle computes each extract once. The
+  * cache lives until the caller's [[graft.CacheScope.releaseAll]], which
+  * the driver contract already requires after the last load/gc action.
   */
 final class SyncPipeline(spark: SparkSession, storeDir: Option[String] = None,
     tableStore: Option[graft.sources.TableStore] = None) {
@@ -47,25 +55,34 @@ final class SyncPipeline(spark: SparkSession, storeDir: Option[String] = None,
     case None     => df.localCheckpoint(eager = true)
   }
 
-  /** Upsert `source` into table `name` on `keys`, recording stats. */
+  /** Upsert `source` into table `name` on `keys`, recording stats.
+    * `source` is persisted and computed once: the merge write fills the
+    * cache and `upserted` is an exact count over it. The cache is freed
+    * by the caller's [[graft.CacheScope.releaseAll]]. */
   def load(name: String, source: DataFrame, keys: Seq[String]): Unit = {
     val t0 = System.nanoTime()
+    val src = graft.CacheScope.persist(source)
     val merged = store.get(name) match {
-      case Some(target) => Merge.upsert(target, source, keys)
-      case None         => source
+      case Some(target) => Merge.upsert(target, src, keys)
+      case None         => src
     }
     store(name) = materialize(name, merged)
-    stats(name) = SyncStats(upserted = source.count(), deleted = 0,
+    stats(name) = SyncStats(upserted = src.count(), deleted = 0,
       duration = (System.nanoTime() - t0) / 1e9)
   }
 
   /** Retain-GC table `name` to the keep-set, recording deleted count
-    * (reference `retain_*`, leaf-first ordering is the caller's duty). */
+    * (reference `retain_*`, leaf-first ordering is the caller's duty).
+    * When nothing is deleted the committed version stays as it is: the
+    * retain is a left-semi join and the deleted set its left-anti
+    * complement, so an empty anti side means the rewrite would reproduce
+    * the table row for row. A NULL-key row never matches the keep-set,
+    * so it counts as deleted and still forces the rewrite. */
   def gc(name: String, keep: DataFrame, keys: Seq[String]): Unit = {
     val t0 = System.nanoTime()
     val target = store(name)
     val deleted = Merge.retainDeletes(target, keep, keys).count()
-    store(name) = materialize(name, Merge.retain(target, keep, keys))
+    if (deleted > 0) store(name) = materialize(name, Merge.retain(target, keep, keys))
     val prev = stats.getOrElse(name, SyncStats(0, 0, 0))
     stats(name) = prev.copy(deleted = prev.deleted + deleted,
       duration = prev.duration + (System.nanoTime() - t0) / 1e9)

@@ -79,7 +79,10 @@ final case class ParquetStore(dir: String) extends TableStore {
     // resolve monotonically (highest completed version wins)
     versions.merge(name, Integer.valueOf(v),
       (a, b) => if (a.intValue() >= b.intValue()) a else b)
-    spark.read.parquet(path)
+    // the schema is the one just written: passing it skips the
+    // footer-reading inference job (file sources read it as nullable,
+    // exactly as inference would)
+    spark.read.schema(df.schema).parquet(path)
   }
 }
 

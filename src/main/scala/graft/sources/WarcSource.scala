@@ -320,16 +320,10 @@ object WarcSource {
     * still writes from the parquet inputs — nothing persists across
     * runs. */
   private val writtenHtmlDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int, String)]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int, Int)]()
   graft.CacheScope.onSessionRelease(() => writtenHtmlDirs.clear())
   def ensureHtmlResponses(docs: DataFrame, dir: String, nFiles: Int): Unit = {
-    // Memo key = (dir, nFiles, docs-plan fingerprint) — r19, per the
-    // r18 advice: keying on dir alone let the FIRST caller's projection
-    // and layout silently win for the whole session; all call sites
-    // pass byte-identical docs today, and this key fails safe (a
-    // different projection or file count re-writes) instead of
-    // trusting that invariant unchecked.
-    val key = (dir, nFiles, docs.queryExecution.logical.canonicalized.toString)
+    val key = htmlResponsesKey(docs, dir, nFiles)
     if (!writtenHtmlDirs.contains(key)) writtenHtmlDirs.synchronized {
       if (!writtenHtmlDirs.contains(key)) {
         writeHtmlResponses(docs, dir, nFiles)
@@ -338,6 +332,23 @@ object WarcSource {
       }
     }
   }
+
+  /** Memo key of [[ensureHtmlResponses]]: (dir, nFiles, docs-plan
+    * fingerprint). Keying on dir alone let the FIRST caller's projection
+    * and layout silently win for the whole session; all call sites pass
+    * byte-identical docs today, and this key fails safe (a different
+    * projection or file count re-writes) instead of trusting that
+    * invariant unchecked. The fingerprint is the canonicalized plan's
+    * semantic hash, not its string: plan strings are truncated at
+    * `spark.sql.debug.maxToStringFields`, so two projections that differ
+    * only past that point would print, and key, the same.
+    *
+    * A re-write replaces the dir's files, so a frame planned over the
+    * earlier write must not be scanned after a second fingerprint
+    * targets the same dir; today every caller writes the same docs. */
+  private[graft] def htmlResponsesKey(docs: DataFrame, dir: String,
+      nFiles: Int): (String, Int, Int) =
+    (dir, nFiles, docs.queryExecution.logical.semanticHash())
 
   /** The two entity-encoded blocks of a doc's fixture page — the
     * write-side twin of the oracle's closed form (see

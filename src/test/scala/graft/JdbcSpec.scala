@@ -160,6 +160,7 @@ class JdbcSpec extends AnyFunSuite {
     p.gc("customers", Seq(Tuple1(1L)).toDF("id"), Seq("id"))
     assert(rec.writes.size == 2 && rec.execs.size == 2)
     assert(p.statsMap("customers").deleted == 1)
+    CacheScope.releaseAll() // driver contract: frees the persisted sources
   }
 
   test("ParquetStore writeSwap: versioned dirs, old version intact after new write") {
@@ -171,5 +172,18 @@ class JdbcSpec extends AnyFunSuite {
     assert(v2.count() == 2 && store.table(spark, "t").count() == 2)
     // previous version still readable (failed-write safety)
     assert(spark.read.parquet(s"$dir/t/v1").count() == 1)
+    // the committed frame carries the schema a plain read infers,
+    // nullability included
+    import org.apache.spark.sql.functions._
+    val typed = spark.range(3).select(col("id"),
+      (col("id") * 100).cast("decimal(12,2)").as("amount"),
+      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int")).as("day"),
+      timestamp_seconds(col("id") * 86400).as("ts"),
+      array(col("id"), col("id") + 1).as("ids"),
+      when(col("id") > 0, lit("x")).as("maybe"))
+    assert(!typed.schema("id").nullable && typed.schema("maybe").nullable)
+    val back = store.writeSwap(spark, "typed", typed)
+    assert(back.schema == spark.read.parquet(s"$dir/typed/v1").schema)
+    assert(back.collect().toSet == typed.collect().toSet)
   }
 }

@@ -44,6 +44,49 @@ class PipelineSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$storeDir/customers/v2")))
     assert(file.statsMap("customers").deleted == mem.statsMap("customers").deleted)
+
+    // gc rewrites only when it deletes: a keep-set covering every key
+    // leaves the committed version in place
+    def versions(t: String) = new java.io.File(s"$storeDir/$t").list()
+      .count(_.startsWith("v"))
+    val p = new SyncPipeline(spark, Some(storeDir))
+    val rows = Seq((1L, "a"), (2L, "b"), (3L, "c"))
+    p.load("gc_cases", rows.toDF("id", "v"), Seq("id"))
+    val before = p.table("gc_cases").collect().toSet
+    p.gc("gc_cases", Seq(1L, 2L, 3L, 4L).toDF("id"), Seq("id"))
+    assert(versions("gc_cases") == 1)
+    assert(p.table("gc_cases").collect().toSet == before)
+    assert(p.statsMap("gc_cases").deleted == 0)
+    // a gc that deletes still writes exactly one new version
+    p.gc("gc_cases", Seq(1L, 3L).toDF("id"), Seq("id"))
+    assert(versions("gc_cases") == 2)
+    assert(p.table("gc_cases").as[(Long, String)].collect().toSet == Set((1L, "a"), (3L, "c")))
+    assert(p.statsMap("gc_cases").deleted == 1)
+    // a NULL key never matches the keep-set: counted as deleted, rewritten
+    val withNull = Seq((Some(1L), "a"), (None, "n")).toDF("id", "v")
+    p.load("gc_null", withNull, Seq("id"))
+    p.gc("gc_null", Seq(1L).toDF("id"), Seq("id"))
+    assert(p.statsMap("gc_null").deleted == 1)
+    assert(versions("gc_null") == 2)
+    assert(p.table("gc_null").as[(Option[Long], String)].collect().toSeq == Seq((Some(1L), "a")))
+    CacheScope.releaseAll()
+  }
+
+  test("one load and one gc of the same source compute that source once") {
+    val storeDir = java.nio.file.Files.createTempDirectory("sync_once").toString
+    val evals = spark.sparkContext.longAccumulator("source_evals")
+    val bump = udf { (id: Long) => evals.add(1); id }
+    val p = new SyncPipeline(spark, Some(storeDir))
+    p.load("t", spark.range(0, 120).select(col("id"), lit("old").as("v")), Seq("id"))
+    // distinct: a count cannot prune the UDF away, as with a real extract
+    val source = spark.range(0, 100, 1, 4)
+      .select(bump(col("id")).as("id"), lit("new").as("v")).distinct()
+    p.load("t", source, Seq("id"))
+    p.gc("t", source, Seq("id"))
+    CacheScope.releaseAll()
+    assert(p.statsMap("t").upserted == 100 && p.statsMap("t").deleted == 20)
+    assert(p.table("t").count() == 100)
+    assert(evals.value == 100, s"source rows computed ${evals.value} times, expected 100")
   }
 
   test("two-phase curation ≡ fused dp1, via the Cli verb, with committed artifacts") {

@@ -490,4 +490,22 @@ class WarcSourceSpec extends AnyFunSuite {
       "5 hops under maxHops=4 must bound, not resolve")
     assert(out("https://x.org/c1") == "ok" && out("https://x.org/c5") == "ok")
   }
+
+  test("ensureHtmlResponses memo key: same docs plan hits, a difference past the plan-string cut misses") {
+    import org.apache.spark.sql.functions._
+    val parquet = java.nio.file.Files.createTempDirectory("warc_memo_key").toString + "/docs"
+    docsDf(5).write.parquet(parquet)
+    def docs(tail: Int) = spark.read.parquet(parquet)
+      .select(Seq(col("doc_id"), col("lang"), col("text")) ++
+        (0 until 30).map(i => lit(if (i == 29) tail else i).as(s"c$i")): _*)
+    // the same projection built twice (a fresh file scan each time) keys the same
+    assert(WarcSource.htmlResponsesKey(docs(29), "/d", 4) ==
+      WarcSource.htmlResponsesKey(docs(29), "/d", 4))
+    // 33 fields print truncated, so the plan strings cannot tell these apart
+    val (a, b) = (docs(29), docs(-1))
+    assert(a.queryExecution.logical.canonicalized.toString ==
+      b.queryExecution.logical.canonicalized.toString)
+    assert(WarcSource.htmlResponsesKey(a, "/d", 4) != WarcSource.htmlResponsesKey(b, "/d", 4))
+    assert(WarcSource.htmlResponsesKey(a, "/d", 4) != WarcSource.htmlResponsesKey(a, "/d", 5))
+  }
 }
