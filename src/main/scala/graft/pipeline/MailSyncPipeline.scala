@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.F
 import graft.operators.Dedup
@@ -76,23 +76,23 @@ object MailSyncPipeline {
     memberAudienceRows(members, catalog)
   }
 
-  /** Member rows → audience rows: primary + partner expansion, email
-    * validity (P10), dedup on normalized email, catalog-driven F8
-    * render. Keeps `role` for tag derivation. */
+  /** Member rows → audience rows in one member scan: each member row
+    * expands in place into its primary and partner audience rows, then
+    * email validity (P10, which also drops an absent partner's NULL
+    * email), dedup on normalized email, catalog-driven F8 render. Keeps
+    * `role` for tag derivation. */
   def memberAudienceRows(members: DataFrame,
       catalog: Seq[graft.sources.MergeField]): DataFrame = {
-    val primary = members.select(
-      col("email"),
-      concat_ws(" ", col("first_name"), col("last_name")).as("name"),
-      col("birthday").as("bday"), col("join_date").as("joined"),
-      coalesce(col("member_type"), lit("member")).as("role"),
-      col("member_class").as("segment"))
-    val partner = members.filter(col("partner_email").isNotNull).select(
-      col("partner_email").as("email"),
-      concat_ws(" ", col("partner_first_name"), col("partner_last_name")).as("name"),
-      col("partner_birthday").as("bday"), col("join_date").as("joined"),
-      lit("partner").as("role"), col("member_class").as("segment"))
-    val valid = primary.unionByName(partner).filter(F.isValidEmail(col("email")))
+    def person(email: String, first: String, last: String, bday: String, role: Column) =
+      struct(col(email).as("email"), concat_ws(" ", col(first), col(last)).as("name"),
+        col(bday).as("bday"), role.as("role"))
+    val valid = members.select(col("join_date").as("joined"), col("member_class").as("segment"),
+        inline(array(
+          person("email", "first_name", "last_name", "birthday",
+            coalesce(col("member_type"), lit("member"))),
+          person("partner_email", "partner_first_name", "partner_last_name",
+            "partner_birthday", lit("partner")))))
+      .filter(F.isValidEmail(col("email")))
     val deduped = Dedup.keepOneByKey(valid, Seq(lower(col("email"))),
       Seq(col("role"), col("name")))
     deduped.select(

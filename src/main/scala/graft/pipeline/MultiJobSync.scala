@@ -112,6 +112,7 @@ object MultiJobSync {
 
   def syncMany(spark: SparkSession, dir: String, jobsIn: Seq[SyncJob],
       concurrency: Int = 20): Map[Long, JobResult] = {
+    require(concurrency >= 1, s"syncMany concurrency must be >= 1, got $concurrency")
     if (jobsIn.isEmpty) return Map.empty
     val pool = Executors.newFixedThreadPool(math.min(concurrency, jobsIn.size))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)

@@ -160,13 +160,14 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
         membersDf(spark), keepIds, Seq("id"),
         exempt = Some(col("status") === "cleaned"))
       .select("id").persist()
-    val n = doomed.count() // D6 stats; also materializes before mutation
-    doomed.repartition(sinkPartitions).foreachPartition { it: Iterator[Row] =>
-      it.map(_.getString(0)).grouped(bs)
-        .foreach(ids => withRetry(retries)(deleteBatch(sid, ids)))
-    }
-    doomed.unpersist()
-    n
+    try {
+      val n = doomed.count() // D6 stats; also materializes before mutation
+      doomed.repartition(sinkPartitions).foreachPartition { it: Iterator[Row] =>
+        it.map(_.getString(0)).grouped(bs)
+          .foreach(ids => withRetry(retries)(deleteBatch(sid, ids)))
+      }
+      n
+    } finally doomed.unpersist()
   }
 
   /** S13: (id, tag, active) updates applied from executors in chunks of

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.{JobStore, MultiJobSync, SyncJob}
+import graft.pipeline.{JobStore, MailSyncPipeline, MultiJobSync, SyncJob}
 import graft.sink.AudienceSink
 
 /** S3 job-config source + D4 multi-job sync with failure isolation
@@ -66,7 +70,6 @@ class MultiJobSyncSpec extends AnyFunSuite {
   }
 
   test("job scope drives the member extract and merge-field catalog") {
-    import org.apache.spark.sql.functions._
     val clubRows = graft.pipeline.MailSyncPipeline
       .audienceRowsFor(spark, dir, SyncJob(9, "c", "x", club = Some(7L)))
     val allRows = graft.pipeline.MailSyncPipeline
@@ -79,5 +82,82 @@ class MultiJobSyncSpec extends AnyFunSuite {
     assert(allJson > 0)
     // partner expansion: partner audience rows exist with their own id
     assert(allRows.filter(col("role") === "partner").count() > 0)
+  }
+
+  test("syncMany rejects a concurrency below 1 by name") {
+    val e = intercept[IllegalArgumentException](
+      MultiJobSync.syncMany(spark, dir, Seq(SyncJob(1, "a", "mj-c0")), concurrency = 0))
+    assert(e.getMessage.contains("concurrency"))
+  }
+
+  test("memberAudienceRows evaluates each member row once") {
+    val evals = spark.sparkContext.longAccumulator("member_evals")
+    val bump = udf { (id: Long) => evals.add(1); id }
+    // every member has a partner, so a per-branch re-read would show 2x
+    val members = spark.range(0, 40, 1, 4).select(
+      concat(lit("m"), col("id"), lit("@x.org")).as("email"),
+      lit("Ann").as("first_name"), concat(lit("L"), col("id")).as("last_name"),
+      lit(null).cast("date").as("birthday"),
+      date_add(lit("2020-01-01").cast("date"), bump(col("id")).cast("int")).as("join_date"),
+      lit("regular").as("member_type"), lit("A").as("member_class"),
+      concat(lit("p"), col("id"), lit("@x.org")).as("partner_email"),
+      lit("Bob").as("partner_first_name"), lit("L").as("partner_last_name"),
+      lit(null).cast("date").as("partner_birthday"))
+    val rows = MailSyncPipeline.memberAudienceRows(members,
+      graft.sources.MergeFieldCatalog.all).collect()
+    assert(rows.length == 80 && rows.count(_.getAs[String]("role") == "partner") == 40)
+    assert(evals.value == 40, s"member rows evaluated ${evals.value} times, expected 40")
+  }
+
+  test("audienceRowsFor matches the two-branch union formulation on every scope") {
+    import graft.queries.Members
+    // The former formulation, kept as the reference: primary and partner
+    // rows from two reads of the member assembly, unioned.
+    def unionRows(members: DataFrame, catalog: Seq[graft.sources.MergeField]): DataFrame = {
+      val primary = members.select(
+        col("email"),
+        concat_ws(" ", col("first_name"), col("last_name")).as("name"),
+        col("birthday").as("bday"), col("join_date").as("joined"),
+        coalesce(col("member_type"), lit("member")).as("role"),
+        col("member_class").as("segment"))
+      val partner = members.filter(col("partner_email").isNotNull).select(
+        col("partner_email").as("email"),
+        concat_ws(" ", col("partner_first_name"), col("partner_last_name")).as("name"),
+        col("partner_birthday").as("bday"), col("join_date").as("joined"),
+        lit("partner").as("role"), col("member_class").as("segment"))
+      val valid = primary.unionByName(partner).filter(graft.functions.F.isValidEmail(col("email")))
+      val deduped = graft.operators.Dedup.keepOneByKey(valid, Seq(lower(col("email"))),
+        Seq(col("role"), col("name")))
+      deduped.select(
+        graft.functions.F.memberIdForEmail(col("email")).as("id"),
+        lower(col("email")).as("email"),
+        lit("subscribed").as("status"),
+        graft.functions.MergeFieldRender.mergeJson(deduped, catalog, Map(
+          "NAME" -> col("name"), "JOINED" -> col("joined"), "BDAY" -> col("bday"),
+          "ROLE" -> col("role"), "SEGMENT" -> col("segment"))).as("merge_json"),
+        col("role"))
+    }
+    def broadcasts(df: DataFrame): Int = (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }).collectWithSubqueries { case b: BroadcastExchangeExec => b }.size
+    val scopes = Seq(
+      (SyncJob(1, "club-7", "x", club = Some(7L)), Members.byClub(spark, dir, 7L),
+        graft.sources.MergeFieldCatalog.club),
+      (SyncJob(2, "region-2", "x", region = Some(2L)), Members.byRegion(spark, dir, 2L),
+        graft.sources.MergeFieldCatalog.all),
+      (SyncJob(3, "all", "x"), Members.all(spark, dir), graft.sources.MergeFieldCatalog.all))
+    for ((job, members, catalog) <- scopes) {
+      val got = MailSyncPipeline.audienceRowsFor(spark, dir, job)
+        .select("id", "email", "status", "merge_json", "role")
+      val want = unionRows(members, catalog)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, job.name)
+      val n = want.count()
+      assert(got.count() == n && n > 0, job.name)
+      // one member-assembly subtree: the audience plan broadcasts no more
+      // than the member plan does (pruned columns can drop a lookup join)
+      val (gotB, memberB) = (broadcasts(got), broadcasts(members))
+      assert(gotB <= memberB, s"${job.name}: $gotB broadcasts, member plan has $memberB")
+    }
   }
 }

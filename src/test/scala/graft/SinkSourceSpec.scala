@@ -99,6 +99,18 @@ class SinkSourceSpec extends AnyFunSuite {
     assert(n == 1)                       // only c deleted
     assert(sink.allIds == Set("a", "b")) // cleaned b spared
   }
+
+  test("audience sink: retain frees its doomed cache when the deletes fail") {
+    val sink = new AudienceSink(sinkId = "t_retain_fail", sinkPartitions = 2, maxRetries = 1)
+    sink.upsertMany(Seq("a", "b", "c").map(id => (id, s"$id@x.org", "subscribed", "{}"))
+      .toDF("id", "email", "status", "merge_json"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    sink.injectTransientFailures(100)
+    try intercept[Exception](sink.retain(spark, Seq("a").toDF("id")))
+    finally sink.injectTransientFailures(0)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"retain left cached RDDs $leaked")
+  }
 }
 
 class MailPipelineSpec extends AnyFunSuite {
