@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum}
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
@@ -206,12 +205,6 @@ object Bench {
     // harness doesn't set it, so the official record is always the full
     // headline.
     val subset = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // Shuffle files on tmpfs when the box has one (r14, after the r13
     // drift attribution): this host's disk-backed /tmp developed ~2x
     // shuffle-file latency between the r12 and r13 record sessions
@@ -226,9 +219,8 @@ object Bench {
     val shm = new java.io.File("/dev/shm")
     val tmpfsShuffle =
       sys.env.get("SPARK_LOCAL_DIRS").isEmpty && shm.isDirectory && shm.canWrite
-    if (tmpfsShuffle)
-      builder.config("spark.local.dir", "/dev/shm/graft-shuffle")
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.build(cpus.toInt,
+      (if (tmpfsShuffle) Seq("spark.local.dir" -> "/dev/shm/graft-shuffle") else Nil): _*)
     // The record states its shuffle-placement conditions explicitly
     // (r15, per the r14 advice): calib_* hints at box state, but a
     // reader comparing headline totals across rounds needs to know
@@ -237,13 +229,12 @@ object Bench {
     val localDirEff =
       sys.env.getOrElse("SPARK_LOCAL_DIRS",
         spark.conf.getOption("spark.local.dir").getOrElse("<spark-default>"))
-    spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/session init, not query work. The
     // flagship runs once at the BENCH scale factor — the rep loop is
     // rep-major, so the first headline query would otherwise be the only
     // one charged for sf-dir footer reads, scan codegen, and broadcast
     // machinery init (the r5 mbr1-vs-mbr3 "inversion" was exactly this
-    // cold-first-query artifact, reproduced by ProfileMbr).
+    // cold-first-query artifact).
     spark.read.parquet(s"$sfDir/region.parquet").count()
     try SparkEntry.queries(headline.head)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()

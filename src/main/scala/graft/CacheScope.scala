@@ -28,6 +28,12 @@ import org.apache.spark.sql.DataFrame
   * threads needs per-scope tokens instead of this global registry —
   * deliberately out of scope for the current drivers, all of which
   * sequence.
+  *
+  * Session tier: state that amortizes ACROSS queries (shared model
+  * training, checkpointed prep frames, written fixtures) lives in a
+  * [[SessionMemo]], which registers its own [[onSessionRelease]] hook.
+  * Only the DrupalFixture base cache, whose one-dir LRU is a different
+  * policy, registers a hook by hand.
   */
 object CacheScope {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -50,9 +56,9 @@ object CacheScope {
     * [[releaseAll]] after EVERY query, so a hook that evicts a cache
     * meant to amortize ACROSS queries (DrupalFixture's base tables)
     * regresses the whole family it serves — mbr4 ran 2.03× for one
-    * round. Cross-query caches belong on [[onSessionRelease]] and must
-    * bound their own memory (keyed LRU); [[onRelease]] is only for
-    * state that really is per-query. */
+    * round. Cross-query caches belong in a [[SessionMemo]] (or, for a
+    * keyed LRU that bounds its own memory, on [[onSessionRelease]]);
+    * [[onRelease]] is only for state that really is per-query. */
   def onRelease(hook: () => Unit): Unit = hooks.add(hook)
 
   private val sessionHooks = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
@@ -61,7 +67,9 @@ object CacheScope {
     * (which Bench/Verify/Cli call once, after their last query), never by
     * the per-query [[releaseAll]]. For caches that amortize across
     * queries — they stay warm through a whole driver run and still leave
-    * nothing pinned when the run ends. */
+    * nothing pinned when the run ends. [[SessionMemo]] registers one
+    * per memo; a hand-registered hook is for a cache with its own
+    * eviction policy (the DrupalFixture base LRU). */
   def onSessionRelease(hook: () => Unit): Unit = sessionHooks.add(hook)
 
   /** End-of-run release: everything [[releaseAll]] does, plus the
@@ -84,5 +92,49 @@ object CacheScope {
       df = live.poll()
     }
     hooks.forEach(h => h())
+  }
+}
+
+/** A cross-query memo, the one form of session state the catalog keeps:
+  * values computed once per key and reused by every later query of the
+  * driver run, then released by [[CacheScope.releaseSession]] — `free`
+  * on every held value (unpersist for a plain `persist`, the default
+  * no-op for checkpointed frames and driver-side models, which the
+  * ContextCleaner reclaims once the memo drops its reference), then
+  * clear.
+  *
+  * Conditions for a sound reuse:
+  *   - the fill is a deterministic function of the key over inputs
+  *     that are immutable for the driver run (fixture tables, the
+  *     frames a caller passes by identity);
+  *   - fills run OUTSIDE the map's bin locks, one fill per key: a
+  *     second caller of the same key waits for the first fill, callers
+  *     of other keys proceed. A fill may therefore read other keys of
+  *     the same memo or other memos, but nested fills must follow an
+  *     acyclic order (today: kmAssign→kmeans→derivedK, sim11→kmeans,
+  *     pqCodes→pq/kmAssign, nearDup clusters→nearDup pairs); a fill
+  *     that reads its own key never returns;
+  *   - a fill that throws leaves no entry, so the next call refills.
+  */
+final class SessionMemo[K, V](free: V => Unit = (_: V) => ()) {
+  private final class Cell(fill: => V) {
+    @volatile var filled = false
+    lazy val value: V = { val v = fill; filled = true; v }
+  }
+  private val cells = new java.util.concurrent.ConcurrentHashMap[K, Cell]()
+  CacheScope.onSessionRelease(() => release())
+
+  /** The value for `key`, running `fill` if no earlier call holds one. */
+  def apply(key: K)(fill: => V): V = {
+    val cell = cells.computeIfAbsent(key, _ => new Cell(fill))
+    try cell.value
+    catch { case e: Throwable => cells.remove(key, cell); throw e }
+  }
+
+  private[graft] def size: Int = cells.size
+
+  private def release(): Unit = {
+    cells.values.forEach(c => if (c.filled) free(c.value))
+    cells.clear()
   }
 }

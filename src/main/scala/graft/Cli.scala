@@ -142,14 +142,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Cli <sfDir> <command...>")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     val df = resolve(spark, args.head, args.tail.toSeq)
     try JsonOut.print(Catalog.ordered(df))
     finally CacheScope.releaseSession() // one-query run: query + session caches end together

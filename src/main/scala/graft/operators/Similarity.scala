@@ -1005,17 +1005,8 @@ object Similarity {
   private case class PrepKey(vectors: AnyRef, graph: AnyRef, cents: AnyRef,
     poolPerCell: Int, midPermille: Int, topCount: Int, kUpper: Int,
     cutLineage: Boolean)
-  private val prepMemo = new java.util.concurrent.ConcurrentHashMap[
-    PrepKey, (DataFrame, DataFrame, DataFrame)]()
-  graft.CacheScope.onSessionRelease(() => {
-    prepMemo.values.forEach { t =>
-      t._1.unpersist(blocking = false)
-      t._2.unpersist(blocking = false)
-      t._3.unpersist(blocking = false)
-      ()
-    }
-    prepMemo.clear()
-  })
+  private val prepMemo = new graft.SessionMemo[PrepKey, (DataFrame, DataFrame, DataFrame)](
+    t => Seq(t._1, t._2, t._3).foreach(_.unpersist(blocking = false)))
 
   /** The layered walk's query-INDEPENDENT frames — three-layer
     * adjacency, normed corpus, entry-point pool — memoized per
@@ -1025,61 +1016,59 @@ object Similarity {
     * the query panel, so one build serves every caller passing the
     * same inputs). Frames are session-persisted directly (the
     * per-query releaseAll must not evict a cross-query cache) and
-    * unpersisted by the releaseSession hook above. */
+    * unpersisted by the memo's session release. */
   private def layeredFrames(vectors: DataFrame, graph: DataFrame,
       cents: DataFrame, poolPerCell: Int, midPermille: Int,
       topCount: Int, kUpper: Int, cutLineage: Boolean): (DataFrame, DataFrame, DataFrame) =
-    prepMemo.computeIfAbsent(
-      PrepKey(vectors, graph, cents, poolPerCell, midPermille, topCount, kUpper,
-        cutLineage),
-      _ => {
-        val asg = graft.CacheScope.persist(Clustering.assign(vectors, cents))
-        val sw = Window.partitionBy(col("cid"))
-          .orderBy(col("cos").desc, col("vec_id").asc)
-        val poolBuilt = asg.withColumn("srn", row_number().over(sw))
-          .filter(col("srn") <= poolPerCell)
-          .select(col("cid"), col("vec_id"), col("srn"))
-        val pool =
-          if (cutLineage) poolBuilt.localCheckpoint() else poolBuilt.persist()
-        val poolIds = pool.select(col("vec_id"))
-        val midIds = vectors.filter(Sampling.bucket(col("vec_id")) < midPermille)
-          .select(col("vec_id")).unionByName(poolIds).distinct()
-        val midEdges = mutualKnn(
-          vectors.join(midIds, Seq("vec_id"))
-            .join(asg.select(col("vec_id"), col("cid")), Seq("vec_id")),
-          "cid", kUpper)
-        // apex node set: smallest-topCount by content-stable priority —
-        // a TakeOrderedAndProject over the corpus, then a model-sized frame
-        val topIds = vectors
-          .select(col("vec_id"), Sampling.hashPriority(col("vec_id")).as("pri"))
-          .orderBy(col("pri"), col("vec_id")).limit(topCount)
-          .select(col("vec_id")).unionByName(poolIds).distinct()
-        val topEdges = mutualKnnBounded(vectors.join(topIds, Seq("vec_id")), kUpper)
-        val layered = graph.select(col("id_a"), col("id_b"))
-          .unionByName(midEdges.select(col("id_a"), col("id_b")))
-          .unionByName(topEdges.select(col("id_a"), col("id_b")))
-        val adjBuilt = layered.select(col("id_a").as("src"), col("id_b").as("dst"))
-          .unionByName(layered.select(col("id_b").as("src"), col("id_a").as("dst")))
-        val vBuilt = withNorm(
-          vectors.select(col("vec_id").as("node_id"), col("embedding").as("nv")),
-          "node_id", "nv", "nn")
-        // cutLineage (r18 opt, guide §3.3 "materialising an intermediate
-        // truncates the plan"): the memoized frames feed every hop of
-        // every rep, and keeping their FULL build lineage under the hop
-        // loop made the executed plan ~2.7 MB of text with >1000 Exchange
-        // nodes — Catalyst re-optimized that tree on every rep even
-        // though execution reused the persisted frames. An eager
-        // localCheckpoint turns each frame into a flat scan (execution
-        // identical — the same persisted partitions) and collapses
-        // per-rep planning to the hop loop itself. ScaleSpec passes
-        // cutLineage=false so its plan pins still see the layer-build
-        // join shapes; the flag changes WHERE the plan is truncated,
-        // never what is computed. Checkpoint residue: model-sized edge
-        // and norm frames, freed with the session.
-        val adj = if (cutLineage) adjBuilt.localCheckpoint() else adjBuilt.persist()
-        val v = if (cutLineage) vBuilt.localCheckpoint() else vBuilt.persist()
-        (adj, v, pool)
-      })
+    prepMemo(PrepKey(vectors, graph, cents, poolPerCell, midPermille, topCount, kUpper,
+      cutLineage)) {
+      val asg = graft.CacheScope.persist(Clustering.assign(vectors, cents))
+      val sw = Window.partitionBy(col("cid"))
+        .orderBy(col("cos").desc, col("vec_id").asc)
+      val poolBuilt = asg.withColumn("srn", row_number().over(sw))
+        .filter(col("srn") <= poolPerCell)
+        .select(col("cid"), col("vec_id"), col("srn"))
+      val pool =
+        if (cutLineage) poolBuilt.localCheckpoint() else poolBuilt.persist()
+      val poolIds = pool.select(col("vec_id"))
+      val midIds = vectors.filter(Sampling.bucket(col("vec_id")) < midPermille)
+        .select(col("vec_id")).unionByName(poolIds).distinct()
+      val midEdges = mutualKnn(
+        vectors.join(midIds, Seq("vec_id"))
+          .join(asg.select(col("vec_id"), col("cid")), Seq("vec_id")),
+        "cid", kUpper)
+      // apex node set: smallest-topCount by content-stable priority —
+      // a TakeOrderedAndProject over the corpus, then a model-sized frame
+      val topIds = vectors
+        .select(col("vec_id"), Sampling.hashPriority(col("vec_id")).as("pri"))
+        .orderBy(col("pri"), col("vec_id")).limit(topCount)
+        .select(col("vec_id")).unionByName(poolIds).distinct()
+      val topEdges = mutualKnnBounded(vectors.join(topIds, Seq("vec_id")), kUpper)
+      val layered = graph.select(col("id_a"), col("id_b"))
+        .unionByName(midEdges.select(col("id_a"), col("id_b")))
+        .unionByName(topEdges.select(col("id_a"), col("id_b")))
+      val adjBuilt = layered.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionByName(layered.select(col("id_b").as("src"), col("id_a").as("dst")))
+      val vBuilt = withNorm(
+        vectors.select(col("vec_id").as("node_id"), col("embedding").as("nv")),
+        "node_id", "nv", "nn")
+      // cutLineage (r18 opt, guide §3.3 "materialising an intermediate
+      // truncates the plan"): the memoized frames feed every hop of
+      // every rep, and keeping their FULL build lineage under the hop
+      // loop made the executed plan ~2.7 MB of text with >1000 Exchange
+      // nodes — Catalyst re-optimized that tree on every rep even
+      // though execution reused the persisted frames. An eager
+      // localCheckpoint turns each frame into a flat scan (execution
+      // identical — the same persisted partitions) and collapses
+      // per-rep planning to the hop loop itself. ScaleSpec passes
+      // cutLineage=false so its plan pins still see the layer-build
+      // join shapes; the flag changes WHERE the plan is truncated,
+      // never what is computed. Checkpoint residue: model-sized edge
+      // and norm frames, freed with the session.
+      val adj = if (cutLineage) adjBuilt.localCheckpoint() else adjBuilt.persist()
+      val v = if (cutLineage) vBuilt.localCheckpoint() else vBuilt.persist()
+      (adj, v, pool)
+    }
 
   /** The layered walk's shared preparation: the memoized
     * query-independent frames plus the normed query panel and the

@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * kernels the DataFrame API uses —
   *
   * {{{
-  * val spark = SparkSession.builder()
-  *   .withExtensions(new GraftExtensions).getOrCreate()
+  * val spark = graft.GraftSession.build(8,
+  *   "spark.sql.extensions" -> "graft.plans.GraftExtensions")
   * spark.sql("SELECT graft_simhash64(lower(text)) FROM docs")
   * }}}
   *

@@ -108,17 +108,15 @@ object DataCatalog {
     * materializes between stages anyway. Both frames are narrow
     * (ids + jaccard / id pairs), eagerly checkpointed, freed with the
     * session. */
-  private val nearDupMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => nearDupMemo.clear())
+  private val nearDupMemo = new graft.SessionMemo[(String, String), org.apache.spark.sql.DataFrame]
   private def minhashPairsShared(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    nearDupMemo.computeIfAbsent(("pairs", d), _ =>
+    nearDupMemo(("pairs", d))(
       NearDup.minhashLsh(spreadDocs(documents(s, d)),
         col("doc_id"), col("text"), 0.5).localCheckpoint())
   private def dedupClustersShared(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    nearDupMemo.computeIfAbsent(("clusters", d), _ =>
+    nearDupMemo(("clusters", d))(
       NearDup.dedupClusters(spreadDocs(documents(s, d)), col("doc_id"),
         minhashPairsShared(s, d)).localCheckpoint())
 
@@ -1633,7 +1631,7 @@ object DataCatalog {
     // into the one-split fixture scan otherwise
     val docs = spreadDocs(documents(s, d))
     // localCheckpoint (lineage TRUNCATION, not just caching — the dp5
-    // lesson, same measured disease here: ProfileDp1 shows the fused
+    // lesson, same measured disease here: a driver profile showed the fused
     // entry spending ~7 of 10.4 s in DRIVER plan re-analysis, with
     // executed jobs totalling ~3 s): five downstream stages consume
     // this frame (minhash signatures, cluster propagation, the survivor
@@ -1686,13 +1684,10 @@ object DataCatalog {
     * inter-stage checkpoint a production pipeline writes between
     * curation and prep (dp1Curated's own scaladoc); residue is one
     * doc_id column, freed with the session. */
-  private val dp1IdsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => dp1IdsMemo.clear())
+  private val dp1IdsMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame]
   private def dp1CuratedIdsShared(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    dp1IdsMemo.computeIfAbsent(d, _ =>
-      dp1Curated(s, d).select("doc_id").localCheckpoint())
+    dp1IdsMemo(d)(dp1Curated(s, d).select("doc_id").localCheckpoint())
 
   // DP2 — the same curated corpus via the TWO-PHASE runner
   // (pipeline.Curation): phase 1 materializes survivors + verified
@@ -1806,12 +1801,9 @@ object DataCatalog {
     * the session-tier release hook drops the memo with the other
     * cross-query caches, keeping long-lived sessions unsurprising.
     * ScaleSpec keeps the derived-k-matches-oracle pin. */
-  private val derivedKMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  graft.CacheScope.onSessionRelease(() => derivedKMemo.clear())
+  private val derivedKMemo = new graft.SessionMemo[String, Int]
   private def derivedKCells(e: org.apache.spark.sql.DataFrame, d: String): Int =
-    derivedKMemo.computeIfAbsent(d,
-      _ => Integer.valueOf(math.max(10L, (e.count() + 49) / 50).toInt)).intValue()
+    derivedKMemo(d)(math.max(10L, (e.count() + 49) / 50).toInt)
 
   /** Session-memoized TRAINED coarse quantizer over the full embeddings
     * corpus — `kmeans(e, derivedKCells, 3)`, the exact model ~10 entries
@@ -1821,32 +1813,23 @@ object DataCatalog {
     * a k-row driver-collected LocalRelation, so the memo holds pure
     * driver state. emb4 — the entry whose MEASUREMENT is the training —
     * keeps training inline; only consumers share. */
-  private val kmeansMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => kmeansMemo.clear())
+  private val kmeansMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame]
   private def kmeansShared(s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    kmeansMemo.computeIfAbsent(d, _ => {
+    kmeansMemo(d) {
       val e = embeddings(s, d)
       Clustering.kmeans(e, derivedKCells(e, d), 3)
-    })
+    }
 
   /** Session-memoized full-corpus assignment against [[kmeansShared]] —
     * `assign(e, model)` = what `kmeansAssign(e, derivedK, 3)` returned,
     * persisted once instead of recomputed by each of the four consumer
     * entries (sim4, sem1, smp5, the sim5 family) on every rep. */
-  private val kmAssignMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => {
-    kmAssignMemo.values.forEach(df => { df.unpersist(blocking = false); () })
-    kmAssignMemo.clear()
-  })
+  private val kmAssignMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame](
+    _.unpersist(blocking = false))
   private def kmAssignShared(s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    kmAssignMemo.computeIfAbsent(d, _ => {
-      val e = embeddings(s, d)
-      Clustering.assign(e, kmeansShared(s, d)).persist()
-    })
+    kmAssignMemo(d)(Clustering.assign(embeddings(s, d), kmeansShared(s, d)).persist())
 
   /** sim11c/sim11d's shared layered-walk inputs — the base mutual-kNN
     * graph and the learned coarse quantizer — memoized per SF dir for
@@ -1855,21 +1838,13 @@ object DataCatalog {
     * to back, 9.6% of the bench wall). Both frames are model-shaped
     * (edge list ≈ corpus×k rows, centroids k rows) and session-
     * persisted directly — the per-query releaseAll must NOT evict them
-    * — with eviction registered on releaseSession (the DrupalFixture
-    * discipline). Entry RESULTS are unchanged: the memo returns the
+    * — and freed on releaseSession: cents (a plain persist) is
+    * unpersisted, base (a localCheckpoint) is reclaimed by the
+    * ContextCleaner. Entry RESULTS are unchanged: the memo returns the
     * same frames the entries built locally before. */
-  private val sim11Memo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame)]()
-  graft.CacheScope.onSessionRelease(() => {
-    // cents (_3) is a plain persist — unpersist it; base (_2) is a
-    // localCheckpoint, freed by ContextCleaner after clear()
-    sim11Memo.values.forEach { t =>
-      t._3.unpersist(blocking = false)
-      ()
-    }
-    sim11Memo.clear()
-  })
+  private val sim11Memo = new graft.SessionMemo[String, (org.apache.spark.sql.DataFrame,
+    org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
+    _._3.unpersist(blocking = false))
   /** Returns the shared (embeddings frame, base mutual-kNN graph,
     * learned centroids) — the SAME frame objects on every call for a
     * given SF dir, so Similarity's identity-keyed layered-frames memo
@@ -1877,7 +1852,7 @@ object DataCatalog {
   private def sim11Shared(s: org.apache.spark.sql.SparkSession, d: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) =
-    sim11Memo.computeIfAbsent(d, _ => {
+    sim11Memo(d) {
       val e = embeddings(s, d)
       // localCheckpoint, not persist (r18 opt): the base graph feeds the
       // hop loops of four entries × every rep, and its full build
@@ -1894,7 +1869,7 @@ object DataCatalog {
       // cache, duplicating the model scan.
       cents.count()
       (e, base, cents)
-    })
+    }
 
   /** Session-memoized brute-force TRUTH panels for the ANN-recall
     * protocol (r19 opt, the kmeansShared discipline): five entries
@@ -1905,23 +1880,21 @@ object DataCatalog {
     * computation. sim1 — the entry whose MEASUREMENT is the exact
     * baseline — keeps computing it inline. Truth frames are panel×5
     * rows, eagerly localCheckpointed; freed with the session. */
-  private val truthMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => truthMemo.clear())
+  private val truthMemo = new graft.SessionMemo[(String, String), org.apache.spark.sql.DataFrame]
   private def truthShared(s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    truthMemo.computeIfAbsent(("p50", d), _ => {
+    truthMemo(("p50", d)) {
       val e = embeddings(s, d)
       Similarity.topK(e.filter(col("vec_id") % 50 === 0), e, 5).localCheckpoint()
-    })
+    }
   private def truth500Shared(s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    truthMemo.computeIfAbsent(("p50lt500", d), _ => {
+    truthMemo(("p50lt500", d)) {
       val e = embeddings(s, d)
       Similarity.topK(
         e.filter(col("vec_id") % 50 === 0 && col("vec_id") < 500), e, 5)
         .localCheckpoint()
-    })
+    }
 
   /** [[kmeansBody]] with k DERIVED from the corpus inside the SQL —
     * `k = max(kMin, ceil(count(*) / cellTarget))`, the operator
@@ -2076,11 +2049,9 @@ object DataCatalog {
     * MEASURES the training, keeps training inline (the emb4 rule). The
     * oracle SQL still replays the full loop, so the end-to-end hash
     * gate is unchanged. */
-  private val lrMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Double]]()
-  graft.CacheScope.onSessionRelease(() => lrMemo.clear())
+  private val lrMemo = new graft.SessionMemo[String, Seq[Double]]
   private def lrModelShared(s: org.apache.spark.sql.SparkSession, d: String): Seq[Double] =
-    lrMemo.computeIfAbsent(d, _ => Learning.logregTrain(embeddings(s, d),
+    lrMemo(d)(Learning.logregTrain(embeddings(s, d),
       col("embedding"), (col("label") < 5).cast("double"), 64, 10, 2.0))
 
   // LR2 — the classifier GATE the training loop exists for: score the
@@ -2246,9 +2217,7 @@ object DataCatalog {
     * kmeans trainings whose result is an m×k-row driver-collected
     * frame — pure model state, retrained identically by eval1, sim5
     * and sim5b on every rep before. */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => pqMemo.clear())
+  private val pqMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame]
   private def sim5Model(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
          org.apache.spark.sql.DataFrame) = {
@@ -2257,7 +2226,7 @@ object DataCatalog {
     // the session memo — both identical to the per-rep retrains they
     // replace (deterministic trainings over immutable fixture tables).
     val cells = kmAssignShared(s, d).select(col("vec_id"), col("cid").as("cell"))
-    val cb = pqMemo.computeIfAbsent(d, _ => Clustering.pqTrain(e))
+    val cb = pqMemo(d)(Clustering.pqTrain(e))
     (e, cells, cb)
   }
 
@@ -2267,15 +2236,13 @@ object DataCatalog {
     * representation" — yet eval1 and the sim5 family re-coded the
     * whole corpus per rep. emb5, whose measurement IS the coding
     * (train + assign), keeps computing inline. */
-  private val pqCodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => pqCodesMemo.clear())
+  private val pqCodesMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame]
   private def pqCodesShared(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    pqCodesMemo.computeIfAbsent(d, _ => {
+    pqCodesMemo(d) {
       val (e, _, cb) = sim5Model(s, d)
       Clustering.pqAssign(e, cb).localCheckpoint()
-    })
+    }
 
   private def sim5Adc(s: org.apache.spark.sql.SparkSession, d: String, k: Int)
       : org.apache.spark.sql.DataFrame = {
@@ -3225,17 +3192,15 @@ object DataCatalog {
     * computation — keep computing inline; consumers measure the mask
     * application, their declared output. Residue: two span-sized RDDs,
     * freed with the session. */
-  private val spanMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => spanMemo.clear())
+  private val spanMemo = new graft.SessionMemo[(String, String), org.apache.spark.sql.DataFrame]
   private def dsubSpansShared(s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    spanMemo.computeIfAbsent(("dsub", d), _ =>
+    spanMemo(("dsub", d))(
       NearDup.exactSubstrSpans(splicedDocs(s, d), col("doc_id"), col("text"), 8)
         .localCheckpoint())
   private def benchSpansShared(s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    spanMemo.computeIfAbsent(("bench", d), _ =>
+    spanMemo(("bench", d))(
       NearDup.benchSubstrSpans(splicedDocs(s, d),
         documents(s, d).filter(col("doc_id") % 50 === 0),
         col("doc_id"), col("text"), 8).localCheckpoint())
@@ -4049,12 +4014,10 @@ object DataCatalog {
     * is the iteration (personalized PageRank / HITS). pr1 — the family
     * flagship — keeps extracting inline. O(docs·links) narrow rows,
     * checkpointed, freed with the session. */
-  private val siteEdgesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => siteEdgesMemo.clear())
+  private val siteEdgesMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame]
   private def siteEdgesShared(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    siteEdgesMemo.computeIfAbsent(d, _ => {
+    siteEdgesMemo(d) {
       val withLinks = spreadDocs(documents(s, d)).withColumn("text",
         concat(col("text"), lit(" see https://WWW.Example"), col("doc_id") % 7,
           lit(".org/p?q="), col("doc_id"),
@@ -4063,7 +4026,7 @@ object DataCatalog {
         .select(concat(lit("site"), col("doc_id") % 11, lit(".com")).as("src"),
           col("host").as("dst"))
         .localCheckpoint()
-    })
+    }
 
   // PR1 — host-graph PageRank (integer-exact): edges are (site host →
   // linked host) from the url1 extraction over the same synthetic
@@ -5669,12 +5632,10 @@ object DataCatalog {
     * per-query releaseAll of pagerank's internal persists; residue is
     * a hosts-sized RDD, freed by ContextCleaner after session release
     * clears the memo. */
-  private val hostRankMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => hostRankMemo.clear())
+  private val hostRankMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame]
   private def hostRanksShared(s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    hostRankMemo.computeIfAbsent(d, _ => {
+    hostRankMemo(d) {
       val docs = documents(s, d)
       val own = docs.select(col("doc_id"),
         concat(lit("example"), col("doc_id") % 11, lit(".org")).as("host"))
@@ -5688,7 +5649,7 @@ object DataCatalog {
         .select(col("host"),
           (lit(1L) + expr("rank_micro DIV 50000000000")).as("host_weight"))
         .localCheckpoint()
-    })
+    }
 
   // DP14 — CRAWL-SCHEDULER flagship (r18 — the composition a fetch
   // scheduler actually runs each cycle, wiring the whole url family
@@ -6273,20 +6234,19 @@ object DataCatalog {
     * bpe1 — the entry that MEASURES the learn loop — trains inline
     * (the emb4 rule). Oracles replay the full training chain, so the
     * end-to-end hash gates are unchanged. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[Bpe.Merge], org.apache.spark.sql.DataFrame)]()
-  // clear() only (r19, per the r18 advice): the memoized frame is a
+  // no-op free (r19, per the r18 advice): the memoized frame is a
   // localCheckpoint, and Dataset.unpersist is a no-op for checkpoint
   // RDD blocks — ContextCleaner frees them once the memo drops its
   // reference. (Same cleanup story for every checkpoint-holding memo
   // in this file.)
-  graft.CacheScope.onSessionRelease(() => bpeMemo.clear())
+  private val bpeMemo =
+    new graft.SessionMemo[String, (Seq[Bpe.Merge], org.apache.spark.sql.DataFrame)]
   private def bpeShared(s: org.apache.spark.sql.SparkSession, d: String):
       (Seq[Bpe.Merge], org.apache.spark.sql.DataFrame) =
-    bpeMemo.computeIfAbsent(d, _ => {
+    bpeMemo(d) {
       val (m, fin) = Bpe.learn(Bpe.wordCounts(documents(s, d), col("text")), BpeMerges)
       (m, fin.localCheckpoint(true))
-    })
+    }
 
   // BPE2 — the trained tokenizer's vocabulary with corpus frequencies:
   // every symbol surviving the merges, weighted by the word counts it
@@ -6738,12 +6698,10 @@ object DataCatalog {
     * (deleteFromIndex re-persists its input per query and that wrapper
     * is released); residue is the index itself — the state a serving
     * system holds anyway — freed with the session. */
-  private val postingsIdxMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => postingsIdxMemo.clear())
+  private val postingsIdxMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame]
   private def postingsIndexShared(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    postingsIdxMemo.computeIfAbsent(d, _ =>
+    postingsIdxMemo(d)(
       Retrieval.postingsIndex(spreadDocs(documents(s, d)),
         col("doc_id"), col("text")).localCheckpoint())
 
@@ -8812,19 +8770,17 @@ object DataCatalog {
     * percentile cutoffs). lm2 — the entry whose measurement IS the
     * scoring — keeps computing inline; ccnet1 measures the histogram/
     * cutoff/bucket machinery, its declared card. */
-  private val famScoreMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-  graft.CacheScope.onSessionRelease(() => famScoreMemo.clear())
+  private val famScoreMemo = new graft.SessionMemo[String, org.apache.spark.sql.DataFrame]
   private def famScoresShared(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    famScoreMemo.computeIfAbsent(d, _ => {
+    famScoreMemo(d) {
       val docs = spreadDocs(documents(s, d))
       LmFilter.familiarityScore(docs, col("doc_id"), col("text"),
           col("doc_id") % 2 === 0)
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .select(col("doc_id"), col("lang"), col("familiarity_micro"))
         .localCheckpoint()
-    })
+    }
 
   val ccnet1 = Q(
     (s, d) => ordered(LmFilter.familiarityTercilesFromScores(

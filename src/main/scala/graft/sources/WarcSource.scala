@@ -319,19 +319,9 @@ object WarcSource {
     * the session's cross-query caches, so every NEW driver invocation
     * still writes from the parquet inputs — nothing persists across
     * runs. */
-  private val writtenHtmlDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int, Int)]()
-  graft.CacheScope.onSessionRelease(() => writtenHtmlDirs.clear())
-  def ensureHtmlResponses(docs: DataFrame, dir: String, nFiles: Int): Unit = {
-    val key = htmlResponsesKey(docs, dir, nFiles)
-    if (!writtenHtmlDirs.contains(key)) writtenHtmlDirs.synchronized {
-      if (!writtenHtmlDirs.contains(key)) {
-        writeHtmlResponses(docs, dir, nFiles)
-        writtenHtmlDirs.add(key)
-        ()
-      }
-    }
-  }
+  private val writtenHtmlDirs = new graft.SessionMemo[(String, Int, Int), Unit]
+  def ensureHtmlResponses(docs: DataFrame, dir: String, nFiles: Int): Unit =
+    writtenHtmlDirs(htmlResponsesKey(docs, dir, nFiles))(writeHtmlResponses(docs, dir, nFiles))
 
   /** Memo key of [[ensureHtmlResponses]]: (dir, nFiles, docs-plan
     * fingerprint). Keying on dir alone let the FIRST caller's projection

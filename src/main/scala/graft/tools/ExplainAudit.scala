@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: dump formatted physical plans for the headline queries so
   * pushdown/broadcast/codegen can be audited (the "is this the plan you'd
   * want" loop). */
@@ -11,11 +9,7 @@ object ExplainAudit {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("j1_assembly_join", "p4_status_filter", "sim2_ivf_ann",
         "a10_stats_agg", "s10_retain_gc")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(8)
     val qs = graft.SparkEntry.queries
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -52,4 +52,33 @@ class CatalogMetaSpec extends AnyFunSuite {
       Map("ignoreNullFields" -> "true")).as("j")).as[String].collect().toSet
     assert(json == Set("""{"name":"x","opt":1}""", """{"name":"y"}"""))
   }
+
+  /** `.scala` files under `root` whose text contains `needle`, relative to `root`. */
+  private def filesContaining(root: String, needle: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains(needle))
+      .map(p => base.relativize(p).toString).toSet
+    finally walk.close()
+  }
+
+  test("one session factory and one session-memo form in the sources") {
+    // needles built by concatenation so this file does not match itself
+    assert(filesContaining("src", "SparkSession" + ".builder()") ==
+      Set("main/scala/graft/GraftSession.scala"),
+      "build sessions through GraftSession.build")
+    assert(filesContaining("src/main", "onSessionRelease" + "(") ==
+      Set("scala/graft/CacheScope.scala", "scala/graft/queries/Members.scala"),
+      "cross-query caches are SessionMemos; only the DrupalFixture LRU registers its own hook")
+    assert(!filesContaining("src/main", "ConcurrentHashMap")
+      .contains("scala/graft/queries/DataCatalog.scala"),
+      "DataCatalog memos are SessionMemos")
+  }
+
+  test("GraftSession sessions run with adaptive execution on") {
+    assert(spark.sessionState.conf.adaptiveExecutionEnabled)
+  }
 }

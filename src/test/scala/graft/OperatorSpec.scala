@@ -7,12 +7,7 @@ import graft.functions.F
 import graft.operators.{Dedup, Merge}
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.build(4)
 }
 
 class OperatorSpec extends AnyFunSuite {

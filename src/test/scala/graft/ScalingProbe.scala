@@ -83,14 +83,7 @@ object ScalingProbe {
     val out = if (args.length > 1) args(1) else "/tmp/graft_scale"
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "3").toInt.max(1)
     val mults = Seq(1, 4, 16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(32)
 
     mults.foreach(m => replicate(spark, base, s"$out/m$m", m))
 
