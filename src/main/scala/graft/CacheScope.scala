@@ -2,19 +2,16 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Registry for operator-internal persisted intermediates, so a
-  * long-lived session can release them after the consuming action
-  * instead of accumulating cached RDDs until LRU eviction thrashes
-  * executor storage.
+/** Release scopes for cached state, in two tiers.
   *
-  * Operators that persist multi-consumer subtrees (the MinHash
-  * signatures, the SimHash bands, the curation pipeline's dedup
-  * checkpoint) register through [[persist]]; pipeline drivers
-  * (Verify / Bench / Cli / SyncPipeline / MailSyncPipeline /
-  * MultiJobSync — anything that runs a query to completion) call
-  * [[releaseAll]] once the action finishes. Each persist remains
-  * individually justified while the query runs; this is the
-  * unpersist-at-pipeline-end half of the contract.
+  * Per-query tier: operators that persist multi-consumer subtrees (the
+  * MinHash signatures, the SimHash bands, the curation pipeline's dedup
+  * checkpoint, a sync load's source) register through [[persist]];
+  * drivers (Verify / Bench / Cli / SyncPipeline / MultiJobSync —
+  * anything that runs a query to completion) call [[releaseAll]] once
+  * the action finishes. Each persist remains individually justified
+  * while the query runs; this is the unpersist-at-pipeline-end half of
+  * the contract.
   *
   * Concurrency contract: the registry is process-global, so
   * [[releaseAll]] must only run at a point where NO query is still
@@ -30,14 +27,15 @@ import org.apache.spark.sql.DataFrame
   * sequence.
   *
   * Session tier: state that amortizes ACROSS queries (shared model
-  * training, checkpointed prep frames, written fixtures) lives in a
-  * [[SessionMemo]], which registers its own [[onSessionRelease]] hook.
-  * Only the DrupalFixture base cache, whose one-dir LRU is a different
-  * policy, registers a hook by hand.
+  * training, checkpointed prep frames, written fixtures) is released
+  * only by [[releaseSession]], never by the per-query [[releaseAll]]
+  * that drivers call after every query. It lives in a [[SessionMemo]],
+  * which registers its own [[onSessionRelease]] hook. Only the
+  * DrupalFixture base cache, whose one-dir LRU is a different policy,
+  * registers a hook by hand.
   */
 object CacheScope {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private val hooks = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
   /** Persist `df` and track it for end-of-pipeline release. */
   def persist(df: DataFrame): DataFrame = {
@@ -45,21 +43,6 @@ object CacheScope {
     live.add(df)
     df
   }
-
-  /** Register a STANDING release hook, run on every [[releaseAll]] —
-    * for caches that memoize their persisted frames outside the `live`
-    * queue and therefore need to evict their own bookkeeping alongside
-    * the unpersist. Hooks stay registered for the life of the process;
-    * register once per cache, not once per frame.
-    *
-    * Granularity warning (the r15 lesson): per-query drivers call
-    * [[releaseAll]] after EVERY query, so a hook that evicts a cache
-    * meant to amortize ACROSS queries (DrupalFixture's base tables)
-    * regresses the whole family it serves — mbr4 ran 2.03× for one
-    * round. Cross-query caches belong in a [[SessionMemo]] (or, for a
-    * keyed LRU that bounds its own memory, on [[onSessionRelease]]);
-    * [[onRelease]] is only for state that really is per-query. */
-  def onRelease(hook: () => Unit): Unit = hooks.add(hook)
 
   private val sessionHooks = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
@@ -80,7 +63,7 @@ object CacheScope {
     sessionHooks.forEach(h => h())
   }
 
-  /** Unpersist every tracked intermediate and run the standing hooks.
+  /** Per-query release: unpersist every tracked intermediate.
     * Idempotent; must run only at a quiesced point (see the concurrency
     * contract above). Non-blocking: the RDDs leave the session's
     * persistent-RDD map immediately, block cleanup proceeds
@@ -91,7 +74,6 @@ object CacheScope {
       df.unpersist(blocking = false)
       df = live.poll()
     }
-    hooks.forEach(h => h())
   }
 }
 

@@ -26,20 +26,14 @@ import graft.operators.{Dedup, Merge}
   * cache lives until the caller's [[graft.CacheScope.releaseAll]], which
   * the driver contract already requires after the last load/gc action.
   */
-final class SyncPipeline(spark: SparkSession, storeDir: Option[String] = None,
+final class SyncPipeline(spark: SparkSession,
     tableStore: Option[graft.sources.TableStore] = None) {
   import scala.collection.mutable
   private val store = mutable.LinkedHashMap[String, DataFrame]()
   private val stats = mutable.LinkedHashMap[String, SyncStats]()
-  /** The persistence seam: an explicit TableStore wins; a bare storeDir
-    * keeps the historical parquet default; neither → localCheckpoint. */
-  private val backing: Option[graft.sources.TableStore] =
-    tableStore.orElse(storeDir.map(graft.sources.ParquetStore(_)))
 
   def table(name: String): DataFrame = store(name)
   def statsMap: Map[String, SyncStats] = stats.toMap
-
-  def init(name: String, df: DataFrame): Unit = store(name) = df
 
   /** Materialize a table state through the TableStore seam
     * (WRITE-TABLE-THEN-SWAP: the merged state becomes visible only after
@@ -50,7 +44,7 @@ final class SyncPipeline(spark: SparkSession, storeDir: Option[String] = None,
     * configured (unit-test mode) it falls back to `localCheckpoint` —
     * executor-block-pinned and NOT fault-tolerant, fine only for
     * ephemeral fixtures. */
-  private def materialize(name: String, df: DataFrame): DataFrame = backing match {
+  private def materialize(name: String, df: DataFrame): DataFrame = tableStore match {
     case Some(ts) => ts.writeSwap(spark, name, df)
     case None     => df.localCheckpoint(eager = true)
   }
@@ -104,12 +98,12 @@ final case class SyncStats(upserted: Long, deleted: Long, duration: Double)
 
 object SyncPipeline {
   /** Demo DAG over the testdata star schema, exercising the full load/GC
-    * protocol: dims before facts (FK order), GC leaf-first. Pass
-    * `storeDir` for the fault-tolerant write-then-swap store. */
+    * protocol: dims before facts (FK order), GC leaf-first. Pass a
+    * `tableStore` for the fault-tolerant write-then-swap store. */
   def runDemo(spark: SparkSession, dir: String,
-      storeDir: Option[String] = None): SyncPipeline = {
+      tableStore: Option[graft.sources.TableStore] = None): SyncPipeline = {
     import graft.sources.Tables._
-    val p = new SyncPipeline(spark, storeDir)
+    val p = new SyncPipeline(spark, tableStore)
     val cust = customer(spark, dir).select(col("c_custkey").as("id"),
       col("c_name").as("name"), col("c_nationkey").cast("long").as("nation"))
     val ord = orders(spark, dir).select(col("o_orderkey").as("id"),

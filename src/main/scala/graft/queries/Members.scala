@@ -621,15 +621,10 @@ object MembersCatalog {
     val scope = scope0 + (if (!homeClubOnly) ""
       else "AND p.paragraph_id IN (SELECT o_orderkey FROM orders " +
         "WHERE o_orderkey % 3 = 0 AND o_orderkey % 43 <> 0) ")
-    "WITH p AS (SELECT o_orderkey AS paragraph_id, o_custkey AS uid, " +
-      "CASE WHEN o_orderkey % 37 = 0 THEN '0' ELSE '1' END AS status, " +
-      "CASE WHEN o_orderkey % 11 = 0 THEN 'ssp_international_membership' ELSE 'membership' END AS ptype " +
-      "FROM orders), " +
+    "WITH " + PCte + ", " +
       "pc AS (SELECT o_orderkey AS entity_id, CAST(o_orderkey % 25 AS BIGINT) AS club_target, " +
       "CASE WHEN o_orderkey % 41 = 0 THEN '1' ELSE '0' END AS deleted FROM orders), " +
-      "fjd AS (SELECT o_orderkey AS entity_id, CAST(o_orderdate AS DATE) AS join_dt FROM orders), " +
-      "fld AS (SELECT o_orderkey AS entity_id, CASE WHEN o_orderkey % 5 = 0 THEN NULL " +
-      "ELSE CAST(o_orderdate AS DATE) + 1460 END AS leave_dt FROM orders), " +
+      FjdCte + ", " + FldCte + ", " +
       "acp AS (SELECT p.uid, p.paragraph_id, pc.club_target, fjd.join_dt, fld.leave_dt " +
       "FROM p JOIN pc ON pc.entity_id = p.paragraph_id AND pc.deleted = '0' " +
       "LEFT JOIN fjd ON fjd.entity_id = p.paragraph_id " +
@@ -673,10 +668,7 @@ object MembersCatalog {
       "WHEN 'MACHINERY' THEN '1099' WHEN 'FURNITURE' THEN '300' ELSE '400' END AS personal_status_id, " +
       "CASE WHEN c_custkey % 2 = 0 THEN c_custkey + 1 END AS partner_user_id FROM customer), " +
       "pm AS (SELECT c_custkey AS pm_uid FROM customer WHERE c_custkey % 17 = 0), " +
-      "mc AS (SELECT o_orderkey AS mc_pid, CAST(o_orderkey % 4 AS BIGINT) AS class_tid " +
-      "FROM orders WHERE o_orderkey % 6 <> 0), " +
-      "ttd AS (SELECT CAST(tid AS BIGINT) AS tid, name FROM (VALUES (0, 'Lifetime'), " +
-      "(1, 'Charter'), (2, 'Honorary'), (3, 'Student')) t(tid, name)), " +
+      McCte + ", " + TtdCte + ", " +
       "nclub AS (SELECT CAST(n_nationkey AS BIGINT) AS nid, n_name AS title FROM nation), " +
       "cnum AS (SELECT CAST(n_nationkey AS BIGINT) AS cn_club, " +
       "CAST(n_nationkey + 100 AS BIGINT) AS club_number FROM nation), " +

@@ -25,11 +25,12 @@ import org.apache.spark.sql.functions._
   *    executors in chunks of 1000 (`mailchimp/src/members.rs:249-274`),
   *    same partition-parallel shape as S11.
   *
-  * The executor-side closure captures only the sink id (a string); state
-  * lives in a static registry — exactly where the real HTTP endpoint
-  * would sit. Every operation is keyed upsert/delete, so Spark task
-  * retries are idempotent (SURVEY §7.4.4). Swapping the registry calls
-  * for REST POSTs yields the production sink unchanged.
+  * All three run one executor push loop (`pushBatches`), whose closure
+  * captures only the sink id (a string) and stateless row/batch
+  * functions; state lives in a static registry — exactly where the real
+  * HTTP endpoint would sit. Every operation is keyed upsert/delete, so
+  * Spark task retries are idempotent (SURVEY §7.4.4). Swapping the
+  * registry calls for REST POSTs yields the production sink unchanged.
   */
 object AudienceSink {
   final class State {
@@ -117,38 +118,44 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
       .toDF("id", "status")
   }
 
-  /** S11: df(id, email, status, merge_json) upserted from executors in
-    * ≤batchSize chunks; returns the upserted count (stats only — the
-    * keep set for S12 stays a DataFrame on the caller's side).
+  /** The one executor push loop behind S11–S13: `data` is spread over
+    * `sinkPartitions` tasks (the bounded sink-side parallelism), each task
+    * posts its rows in ≤`size` batches, and every batch goes through
+    * [[AudienceSink.withRetry]]. Returns the rows posted.
     *
-    * The count rides a LongAccumulator inside the SAME foreachPartition
-    * pass that posts the batches: the upstream plan executes once per
-    * call (the old trailing `count()` ran the whole member transform a
-    * second time — at 100 TB, twice the pipeline per sink call — and
-    * could diverge from what was actually posted for non-deterministic
-    * inputs). Accumulator updates inside an action are applied exactly
-    * once per successful task, so task retries don't double-count. */
-  def upsertMany(df: DataFrame): Long = {
-    val (sid, bs, retries) = (sinkId, batchSize, maxRetries)
-    val data = df.select("id", "email", "status", "merge_json")
-    val sent = data.sparkSession.sparkContext.longAccumulator("audience_upserted")
-    data.repartition(sinkPartitions)
-      .foreachPartition { it: Iterator[Row] =>
-        it.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-          .grouped(bs)
-          .foreach { batch =>
-            withRetry(retries)(postBatch(sid, batch))
-            sent.add(batch.size)
-          }
+    * The count rides a LongAccumulator inside the SAME pass that posts
+    * the batches, so the upstream plan executes once per sink call (a
+    * trailing `count()` would run the whole member transform a second
+    * time, and could diverge from what was actually posted for
+    * non-deterministic inputs). Accumulator updates inside an action are
+    * applied exactly once per successful task, so task retries don't
+    * double-count. */
+  private def pushBatches[T](data: DataFrame, size: Int, counter: String)(
+      decode: Row => T)(post: (String, Seq[T]) => Unit): Long = {
+    val (sid, retries) = (sinkId, maxRetries)
+    val sent = data.sparkSession.sparkContext.longAccumulator(counter)
+    data.repartition(sinkPartitions).foreachPartition { it: Iterator[Row] =>
+      it.map(decode).grouped(size).foreach { batch =>
+        withRetry(retries)(post(sid, batch))
+        sent.add(batch.size)
       }
+    }
     sent.value
   }
+
+  /** S11: df(id, email, status, merge_json) upserted in ≤batchSize
+    * chunks; returns the upserted count (stats only — the keep set for
+    * S12 stays a DataFrame on the caller's side). */
+  def upsertMany(df: DataFrame): Long =
+    pushBatches(df.select("id", "email", "status", "merge_json"), batchSize,
+        "audience_upserted") { r =>
+      (r.getString(0), r.getString(1), r.getString(2), r.getString(3))
+    }(postBatch)
 
   /** S12: delete members not in `keep` (a DataFrame of ids), excluding
     * cleaned — the doomed set is a distributed anti-join and the deletes
     * are executor-side batches. Returns the deleted count. */
   def retain(spark: SparkSession, keep: DataFrame): Long = {
-    val (sid, bs, retries) = (sinkId, batchSize, maxRetries)
     val keepIds =
       if (keep.columns.contains("id")) keep.select("id")
       else {
@@ -161,30 +168,20 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
         exempt = Some(col("status") === "cleaned"))
       .select("id").persist()
     try {
-      val n = doomed.count() // D6 stats; also materializes before mutation
-      doomed.repartition(sinkPartitions).foreachPartition { it: Iterator[Row] =>
-        it.map(_.getString(0)).grouped(bs)
-          .foreach(ids => withRetry(retries)(deleteBatch(sid, ids)))
-      }
+      // D6 stats; also materializes the doomed set before the deletes
+      // mutate the audience it is computed from (a live paged scan
+      // shifts its offsets under deletes)
+      val n = doomed.count()
+      pushBatches(doomed, batchSize, "audience_deleted")(_.getString(0))(deleteBatch)
       n
     } finally doomed.unpersist()
   }
 
-  /** S13: (id, tag, active) updates applied from executors in chunks of
-    * 1000. Returns the number of tag operations, counted in the same
-    * single pass that posts them (see upsertMany). */
-  def updateTags(updates: DataFrame): Long = {
-    val (sid, retries) = (sinkId, maxRetries)
-    val data = updates.select("id", "tag", "active")
-    val sent = data.sparkSession.sparkContext.longAccumulator("audience_tag_ops")
-    data.repartition(sinkPartitions).foreachPartition { it: Iterator[Row] =>
-      it.map(r => (r.getString(0), r.getString(1), r.getBoolean(2)))
-        .grouped(1000)
-        .foreach { chunk =>
-          withRetry(retries)(postTagBatch(sid, chunk))
-          sent.add(chunk.size)
-        }
-    }
-    sent.value
-  }
+  /** S13: (id, tag, active) updates applied in chunks of 1000. Returns
+    * the number of tag operations, counted in the same single pass that
+    * posts them. */
+  def updateTags(updates: DataFrame): Long =
+    pushBatches(updates.select("id", "tag", "active"), 1000, "audience_tag_ops") { r =>
+      (r.getString(0), r.getString(1), r.getBoolean(2))
+    }(postTagBatch)
 }

@@ -10,12 +10,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 form of the paged audience scan (SURVEY §2.1 S4/S5, §4):
+/** The paged audience scan as a DataSource V2 (SURVEY §2.1 S4/S5, §4):
   * `spark.read.format("graft.sources.AudienceDataSource")
-  *   .option("total", n).option("pageSize", 1000).option("concurrency", 10)`.
+  *   .option("total", n).option("pageSize", 1000)`.
   *
   * - One `InputPartition` per page → page parallelism is partition
-  *   parallelism, exactly the reference's 10-concurrent page fan-out
+  *   parallelism, bounded by the cores Spark runs tasks on; it stands in
+  *   for the reference's 10-concurrent page fan-out
   *   (`mailchimp/src/members.rs:24-48`).
   * - `SupportsPushDownRequiredColumns` mirrors the REST `fields=`
   *   projection param (`mailchimp/src/lib.rs:366-373`): pruned columns
@@ -35,10 +36,7 @@ class AudienceDataSource extends TableProvider {
     // passes options.asCaseSensitiveMap()), so camelCase user options
     // like pageSize would miss a lowercase lookup — normalize first.
     val opts = new CaseInsensitiveStringMap(properties)
-    new AudienceTable(
-      opts.getLong("total", 1000L),
-      opts.getInt("pageSize", 300),
-      opts.getInt("concurrency", 10))
+    new AudienceTable(opts.getLong("total", 1000L), opts.getInt("pageSize", 300))
   }
 }
 
@@ -58,17 +56,17 @@ object AudienceDataSource {
   }
 }
 
-final class AudienceTable(total: Long, pageSize: Int, concurrency: Int)
+final class AudienceTable(total: Long, pageSize: Int)
     extends Table with SupportsRead {
   override def name(): String = s"audience($total)"
   override def schema(): StructType = AudienceDataSource.FullSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new AudienceScanBuilder(total, pageSize, concurrency)
+    new AudienceScanBuilder(total, pageSize)
 }
 
-final class AudienceScanBuilder(total: Long, pageSize: Int, concurrency: Int)
+final class AudienceScanBuilder(total: Long, pageSize: Int)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = AudienceDataSource.FullSchema
 

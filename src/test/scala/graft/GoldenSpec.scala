@@ -42,6 +42,8 @@ object GoldenSpec {
 
 class GoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  /** All three shapes, built once for the three tests. */
+  private lazy val actualByName = GoldenSpec.shapes(spark).toMap
 
   private def golden(name: String): Seq[String] =
     Files.readAllLines(Paths.get(s"${GoldenSpec.goldenDir}/$name.jsonl"))
@@ -50,7 +52,6 @@ class GoldenSpec extends AnyFunSuite {
   for ((name, _) <- Seq("members_all", "sync_app_stats", "sync_mail_stats")
       .map(n => n -> ())) {
     test(s"golden: $name matches checked-in contract") {
-      val actualByName = GoldenSpec.shapes(spark).toMap
       val actual = actualByName(name)
       val expected = golden(name)
       assert(actual.size == expected.size,

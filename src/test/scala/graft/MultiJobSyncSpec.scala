@@ -30,22 +30,33 @@ class MultiJobSyncSpec extends AnyFunSuite {
   }
 
   test("sync_many: one failing job never aborts the rest; per-job stats emit (D4)") {
-    val jobs = Seq(
-      SyncJob(1, "club-7", "mj-ok1", club = Some(7L)),
-      SyncJob(2, "poison", "mj-bad"),
-      SyncJob(3, "region-2", "mj-ok2", region = Some(2L)))
+    import spark.implicits._
+    // the `sync-mail run` surface: jobs table → sync_many → stats lines;
+    // listed out of id order, the lines still come back in id order
+    val jobsDf = Seq[(Long, String, String, Option[Long], Option[Long])](
+      (3, "region-2", "mj-ok2", None, Some(2L)),
+      (1, "club-7", "mj-ok1", Some(7L), None),
+      (2, "poison", "mj-bad", None, None)).toDF("id", "name", "list", "club", "region")
     // poison job's sink fails more times than the retry budget ever tries
     AudienceSink.state("job-mj-bad").failNextAttempts.set(1000000)
 
-    val results = MultiJobSync.syncMany(spark, dir, jobs, concurrency = 3)
+    val out = new java.io.ByteArrayOutputStream()
+    val results = Console.withOut(out)(MultiJobSync.run(spark, dir, jobsDf, concurrency = 3))
     assert(results.size == 3)
     assert(results(1).stats.exists(_.upserted > 0), "job 1 must succeed")
     assert(results(3).stats.exists(_.upserted > 0), "job 3 must succeed")
     assert(results(2).stats.isEmpty && results(2).error.nonEmpty, "job 2 must fail isolated")
-    // per-job stats JSON lines (D6): success lines carry counts, the
-    // failed line carries the error, serde-style
-    assert(results(1).statsJson.contains("\"upserted\":"))
-    assert(results(2).statsJson.contains("\"error\":"))
+    // per-job stats JSON lines (D6): one strict-JSON line per job in id
+    // order; success lines carry counts, the failed line the error
+    val lines = out.toString("UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+    val parsed = lines.map(l => spark.read.option("mode", "FAILFAST")
+      .json(Seq(l).toDS).collect().head)
+    assert(parsed.map(_.getAs[Long]("job")) == Seq(1L, 2L, 3L), lines.mkString("\n"))
+    for (r <- parsed) {
+      val failed = r.getAs[Long]("job") == 2L
+      assert(r.schema.fieldNames.contains("error") == failed, r)
+      assert(r.schema.fieldNames.contains("upserted") == !failed, r)
+    }
     // the failed job wrote nothing; the good jobs' sinks are populated
     assert(new AudienceSink("job-mj-ok1").size > 0)
     assert(new AudienceSink("job-mj-ok2").size > 0)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.SyncPipeline
+import graft.sources.ParquetStore
 import graft.streaming.EventStream
 
 class PipelineSpec extends AnyFunSuite {
@@ -32,7 +33,7 @@ class PipelineSpec extends AnyFunSuite {
   test("file-backed store: write-then-swap matches in-memory results") {
     val storeDir = java.nio.file.Files.createTempDirectory("sync_store").toString
     val mem = SyncPipeline.runDemo(spark, sf)
-    val file = SyncPipeline.runDemo(spark, sf, Some(storeDir))
+    val file = SyncPipeline.runDemo(spark, sf, tableStore = Some(ParquetStore(storeDir)))
     for (t <- Seq("customers", "orders")) {
       assert(file.table(t).except(mem.table(t)).count() == 0)
       assert(mem.table(t).except(file.table(t)).count() == 0)
@@ -49,7 +50,7 @@ class PipelineSpec extends AnyFunSuite {
     // leaves the committed version in place
     def versions(t: String) = new java.io.File(s"$storeDir/$t").list()
       .count(_.startsWith("v"))
-    val p = new SyncPipeline(spark, Some(storeDir))
+    val p = new SyncPipeline(spark, tableStore = Some(ParquetStore(storeDir)))
     val rows = Seq((1L, "a"), (2L, "b"), (3L, "c"))
     p.load("gc_cases", rows.toDF("id", "v"), Seq("id"))
     val before = p.table("gc_cases").collect().toSet
@@ -76,7 +77,7 @@ class PipelineSpec extends AnyFunSuite {
     val storeDir = java.nio.file.Files.createTempDirectory("sync_once").toString
     val evals = spark.sparkContext.longAccumulator("source_evals")
     val bump = udf { (id: Long) => evals.add(1); id }
-    val p = new SyncPipeline(spark, Some(storeDir))
+    val p = new SyncPipeline(spark, tableStore = Some(ParquetStore(storeDir)))
     p.load("t", spark.range(0, 120).select(col("id"), lit("old").as("v")), Seq("id"))
     // distinct: a count cannot prune the UDF away, as with a real extract
     val source = spark.range(0, 100, 1, 4)

@@ -1,37 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sink.AudienceSink
-import graft.sources.PagedSource
 
 class SinkSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private val audienceSchema = StructType(Seq(
-    StructField("id", StringType), StructField("email", StringType),
-    StructField("status", StringType), StructField("rating", IntegerType)))
-
-  test("paged source: pages partition-parallel, all rows, no dupes") {
-    val df = PagedSource.read(spark, audienceSchema, total = 2500, pageSize = 300,
-      concurrency = 10, PagedSource.syntheticAudience(2500))
-    assert(df.count() == 2500)
-    assert(df.select("id").distinct().count() == 2500)
-    assert(df.rdd.getNumPartitions == 10)
-  }
-
-  test("paged source: projection pushdown passes only required fields") {
-    val slim = StructType(Seq(StructField("id", StringType)))
-    var seenFields: Seq[String] = Nil
-    val spy: PagedSource.Fetch = (off, cnt, fields) => {
-      seenFields = fields; PagedSource.syntheticAudience(100)(off, cnt, fields)
-    }
-    val df = PagedSource.read(spark, slim, 100, 50, 2, spy)
-    assert(df.columns.toSeq == Seq("id"))
-    assert(df.count() == 100)
-  }
 
   test("audience sink: upsert chunks, id set, retain spares cleaned, tags diff") {
     val sink = new AudienceSink(sinkId = "t1", batchSize = 10, sinkPartitions = 4)
@@ -78,6 +53,20 @@ class SinkSourceSpec extends AnyFunSuite {
     assert(sink.updateTags(tags) == 30)
     assert(SinkSourceSpec.planEvals.get() == 30,
       s"updateTags evaluated the input plan ${SinkSourceSpec.planEvals.get() / 30.0} times")
+
+    // retain: the keep-set plan runs once, in the count that materializes
+    // the doomed set; the deletes read that cache. The probe is marked
+    // non-deterministic so the anti-join's inferred isnotnull(id) filter
+    // is not pushed below it (that would call it twice per row per run).
+    SinkSourceSpec.planEvals.set(0)
+    val keepProbe = udf { (id: String) => SinkSourceSpec.planEvals.incrementAndGet(); id }
+      .asNondeterministic()
+    val keep = spark.range(0, 20, 1, 2)
+      .select(keepProbe(format_string("m%03d", col("id"))).as("id"))
+    assert(sink.retain(spark, keep) == 20)
+    assert(sink.allIds == (0 until 20).map(i => f"m$i%03d").toSet)
+    assert(SinkSourceSpec.planEvals.get() == 20,
+      s"retain evaluated the keep-set plan ${SinkSourceSpec.planEvals.get() / 20.0} times")
   }
 
   test("audience sink: transient batch failures retried to success") {
@@ -117,27 +106,35 @@ class MailPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("mail sync end-to-end: upsert, retain idempotence, tags") {
-    val sink = new AudienceSink(sinkId = "mail1", batchSize = 100, sinkPartitions = 4)
-    // pre-seed a stale member that the retain pass must GC, plus a
-    // cleaned member it must spare
+    import scala.jdk.CollectionConverters._
     import spark.implicits._
+    import graft.pipeline.{MultiJobSync, SyncJob}
+    val job = SyncJob(1, "all-members", "mail1")
+    val st = AudienceSink.state("job-mail1")
+    st.members.clear(); st.tags.clear()
+    // pre-seed the job's sink with a stale member that the retain pass
+    // must GC, plus a cleaned member it must spare
+    val sink = new AudienceSink(sinkId = "job-mail1")
     sink.upsertMany(Seq(
       ("stale", "old@x.org", "subscribed", "{}"),
       ("ghost", "ghost@x.org", "cleaned", "{}")).toDF("id", "email", "status", "merge_json"))
 
-    val stats = graft.pipeline.MailSyncPipeline.run(spark, "/root/testdata/sf0.001", sink)
+    val stats = MultiJobSync.runJob(spark, "/root/testdata/sf0.001", job)
     assert(stats.upserted > 0)
     assert(stats.deleted == 1)                    // stale gone
     assert(sink.get("ghost").nonEmpty)            // cleaned spared
     assert(sink.get("stale").isEmpty)
     // idempotent: re-running changes nothing
-    val stats2 = graft.pipeline.MailSyncPipeline.run(spark, "/root/testdata/sf0.001", sink)
+    val stats2 = MultiJobSync.runJob(spark, "/root/testdata/sf0.001", job)
     assert(stats2.upserted == stats.upserted && stats2.deleted == 0)
-    // partner expansion: partner ids exist (md5 of partner+email)
-    val rows = graft.pipeline.MailSyncPipeline.audienceRows(spark, "/root/testdata/sf0.001")
-    val partners = rows.filter(col("email").startsWith("partner+")).count()
-    assert(partners > 0)
-    assert(rows.filter(col("email").endsWith("example.com")).count() == 0)
+    // member tags land: three tag updates per audience row
+    assert(stats.tagOps == 3 * stats.upserted)
+    val tagged = sink.allIds.flatMap(sink.tagsOf)
+    assert(Set("member", "partner").subsetOf(tagged), s"tags landed: $tagged")
+    // no invalid address is ever posted
+    val emails = st.members.values.asScala.map(_._1)
+    assert(emails.size == stats.upserted + 1)
+    assert(!emails.exists(_.endsWith("example.com")))
   }
 }
 
