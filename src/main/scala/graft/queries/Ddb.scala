@@ -20,9 +20,10 @@ object DateFilter {
   * deterministic projection of one driver parquet table). */
 object DdbFixture {
   /** Leadership assignments (role paragraphs): entity kind cycles
-    * club / region / standing-committee / international. */
+    * club / region / standing-committee / international. Reads
+    * DrupalFixture's cached orders base, as the member assembly does. */
   def leadership(s: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(s, d).filter(col("o_orderkey") % 13 === 0)
+    val o = DrupalFixture.ordersB(s, d).filter(col("o_orderkey") % 13 === 0)
     o.select(
       col("o_custkey").as("uid"),
       (col("o_orderkey") % 4).as("kind"), // 0 club, 1 region, 2 committee, 3 intl
@@ -76,7 +77,7 @@ object Clubs {
 /** Mirrors `ddb/src/regions.rs:5-33`. */
 object Regions {
   def all(s: SparkSession, d: String): DataFrame =
-    Tables.region(s, d)
+    DrupalFixture.regionB(s, d)
       .join(DrupalFixture.regionNumber(s, d),
         col("r_regionkey").cast("long") === col("entity_id"))
       .select(col("r_regionkey").cast("long").as("uid"),

@@ -19,8 +19,11 @@ import org.apache.spark.sql.functions._
   *    never touching `cleaned` members (`mailchimp/src/members.rs:68-97`).
   *    The keep set is a DataFrame and the doomed set is a distributed
   *    anti-join (Merge.retainDeletes); deletes are pushed from executors
-  *    in batches. Nothing member-shaped ever lands on the driver — at a
-  *    10⁸-member audience the driver only sees counts.
+  *    in batches. The anti-join's audience side is `membersDf`, which
+  *    in this emulation is a driver-side LocalRelation of the whole
+  *    registry, built on every `retain`; a production sink would read
+  *    the audience through a distributed paged scan instead, so that
+  *    the driver holds no member rows.
   *  - S13 `updateTags`: per-member tag-state updates applied from
   *    executors in chunks of 1000 (`mailchimp/src/members.rs:249-274`),
   *    same partition-parallel shape as S11.
@@ -107,10 +110,12 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
     state(sinkId).failNextAttempts.set(n)
 
   /** The audience "list members" endpoint as a DataFrame (id, status).
-    * Production shape: the paged DSv2 scan (graft.sources
-    * .AudienceDataSource) — a distributed, column-pruned page fan-out.
-    * The in-JVM emulation snapshots the registry service-side; the
-    * PIPELINE never collects it. */
+    * The emulation snapshots the whole registry on the driver into a
+    * LocalRelation, so every call holds one row per member in driver
+    * memory. The sink does not read the paged DSv2 scan
+    * (graft.sources.AudienceDataSource); a production sink would page
+    * the endpoint from executors, as that source does, so no member
+    * rows reach the driver. */
   def membersDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
     state(sinkId).members.asScala.toSeq

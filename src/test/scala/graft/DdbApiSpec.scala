@@ -75,4 +75,35 @@ class DdbApiSpec extends AnyFunSuite {
     val email = m.orderBy("uid").select("email").first().getString(0)
     assert(Members.byEmail(spark, d, email).count() == 1)
   }
+
+  test("Members.eavPass equals the chained equi-joins, fan-out and NULL keys included") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    // key 1: two base rows × two f1 rows (fan-out on both sides); 2: f1
+    // only; 3: two f2 rows; 4: no field row; 5 / 6: field-only keys;
+    // NULL keys on the base side and on both field sides
+    val base = Seq((Some(1L), "a"), (Some(1L), "a2"), (Some(2L), "b"), (Some(3L), "c"),
+      (Some(4L), "d"), (None, "n1"), (None, "n2")).toDF("k", "b")
+    val f1 = Seq((Some(1L), 10), (Some(1L), 11), (Some(2L), 20), (None, 99), (Some(5L), 50))
+      .toDF("k", "x")
+    val f2 = Seq((Some(1L), "p"), (Some(3L), "q"), (Some(3L), "q2"), (None, "z"), (Some(6L), "o"))
+      .toDF("k", "y")
+    def chained(fields: (DataFrame, String)*): DataFrame =
+      fields.zipWithIndex.foldLeft(base) { case (acc, ((f, how), i)) =>
+        acc.join(f.withColumnRenamed("k", s"k$i"), col("k") === col(s"k$i"), how).drop(s"k$i")
+      }
+    def same(got: DataFrame, want: DataFrame, rows: Long): Unit = {
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(want.count() == rows && got.count() == rows)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
+    for ((h1, h2, rows) <- Seq(("inner", "left", 5L), ("left", "left", 10L),
+        ("left", "inner", 6L), ("inner", "inner", 4L)))
+      same(Members.eavPass(base, "k", ("f1", h1, f1), ("f2", h2, f2)),
+        chained(f1 -> h1, f2 -> h2), rows)
+    // a "list" field holds the left join's matches, collected per base row
+    same(Members.eavPass(base, "k", ("f2", "list", f2))
+        .select(col("k"), col("b"), explode_outer(col("f2.y")).as("y")),
+      chained(f2 -> "left"), 8L)
+  }
 }

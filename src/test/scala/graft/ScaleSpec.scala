@@ -52,7 +52,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("mbr1b: the bucketed EAV assembly join plans with ZERO ShuffleExchange") {
-    import graft.queries.DrupalFixture
+    import graft.queries.{DrupalFixture, Members}
     import graft.sources.{BucketedStore, Tables}
     val table = "graft_orders_bykey_" + BucketedStore.sfTag(sf)
     val orders = BucketedStore.ensure(spark, table,
@@ -61,36 +61,28 @@ class ScaleSpec extends AnyFunSuite {
       "o_orderkey", 8)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      // force SMJ: at 100 TB none of these fact-side frames broadcasts,
-      // so the pin models the at-scale plan, not the fixture's
+      // broadcasts off: at 100 TB none of these fact-side frames
+      // broadcasts, so a join that creeps into the pass cannot hide
+      // behind one and the pin models the at-scale plan
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      def acpOf(): org.apache.spark.sql.DataFrame = {
-        val p = DrupalFixture.paragraphs(spark, sf)
-          .filter(col("status") === "1" && col("ptype") === "membership")
-        val pc = DrupalFixture.paraClub(spark, sf).filter(col("deleted") === "0")
-          .select(col("entity_id"), col("club_target"))
-        val fjd = DrupalFixture.paraJoin(spark, sf).filter(col("deleted") === "0")
-          .select(col("entity_id"), col("join_dt"))
-        val fld = DrupalFixture.paraLeave(spark, sf).filter(col("deleted") === "0")
-          .select(col("entity_id"), col("leave_dt"))
-        p.join(pc, col("paragraph_id") === pc("entity_id")).drop("entity_id")
-          .join(fjd, col("paragraph_id") === fjd("entity_id"), "left").drop("entity_id")
-          .join(fld, col("paragraph_id") === fld("entity_id"), "left").drop("entity_id")
-      }
-      // the flagship's acp subtree over the PRE-BUCKETED base: every
-      // projection inherits HashPartitioning(o_orderkey) from the scan
-      // (alias-aware), so the 4-way join needs no exchange at all
+      // the production paragraph pass (p, pc, fjd, fld, mc and the three
+      // link lists keyed on paragraph_id): over the PRE-BUCKETED base
+      // every branch inherits HashPartitioning(o_orderkey) from the scan
+      // (alias-aware), the union keeps it, and the keyed pass needs no
+      // exchange at all
+      def acpOf(): org.apache.spark.sql.DataFrame =
+        Members.paragraphPass(spark, sf, "membership", Some(Members.liveClubs(spark, sf)))
       val bucketed = DrupalFixture.withBases(Map("orders" -> orders))(acpOf())
       assert(bucketed.count() > 0)
       val shuffles = nodes(bucketed).collect { case s: ShuffleExchangeExec => s }
       assert(shuffles.isEmpty,
-        "the pre-bucketed assembly join must plan shuffle-free — at 100 TB " +
+        "the pre-bucketed assembly pass must plan shuffle-free — at 100 TB " +
           "these are the flagship's multi-terabyte fact exchanges")
-      // non-vacuity: the SAME subtree on plain storage does shuffle
+      // non-vacuity: the SAME pass on plain storage does shuffle
       val plain = acpOf()
       plain.count()
       assert(nodes(plain).collect { case s: ShuffleExchangeExec => s }.nonEmpty,
-        "control: the unbucketed assembly join should shuffle under SMJ")
+        "control: the unbucketed assembly pass should shuffle on paragraph_id")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -99,27 +91,25 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("mbr bucketed storage: FULL flagship plan exchange count vs documented lower bound") {
-    // r16 (the r15 verdict's ask #5): the acp-subtree pin above proves
-    // the EAV assembly goes exchange-free; this pin counts exchanges on
-    // the WHOLE byClub plan. Measured under forced SMJ at 4 shuffle
-    // partitions: PLAIN storage = 20 exchanges; BUCKETED (orders by
-    // o_orderkey, customer by c_custkey) = 11. The 9 eliminated are the
-    // 4-way EAV assembly (paragraph_id + entity_id ×3) and the
-    // customer-derived frames' uid-side shuffles (md/pm/pu/pp) — at
-    // 100 TB these are the multi-terabyte fact exchanges. The remaining
-    // exchanges are the documented LOWER BOUND: every one is an
-    // algorithmic RE-KEY no single bucketing per table can avoid —
-    //   email            (the dedupe_members window key)
-    //   partner_user_id  (partner self-joins re-key uid → partner)
-    //   uid              (flags rollup re-keys acp from paragraph_id;
-    //                     partition-count alignment with the 32-bucket
-    //                     customer scan can add a width-change echo)
-    //   (uid, pid) ×3    (flag-link joins on the composite key)
-    //   ap_pid           (active-pick re-keys flags onto paragraphs)
+    // r16 (the r15 verdict's ask #5): the paragraph-pass pin above
+    // proves the EAV assembly goes exchange-free; this pin counts
+    // exchanges on the WHOLE byClub plan. Measured with broadcasts off
+    // at 4 shuffle partitions: PLAIN storage = 5 exchanges, BUCKETED
+    // (orders by o_orderkey, customer by c_custkey) = 4. Each keyed
+    // pass shuffles once, on its key:
+    //   paragraph_id     (the paragraph pass; gone when bucketed)
+    //   partner_user_id  (the partner pass re-keys the profile)
+    //   uid              (the person pass re-keys the memberships from
+    //                     paragraph_id; the union of differently
+    //                     partitioned branches shuffles every branch)
     //   o_custkey        (brns re-keys orders from o_orderkey)
+    //   email            (the dedupe_members window key)
+    // The four left when bucketed are the documented LOWER BOUND: each
+    // is an algorithmic RE-KEY no single bucketing per table can avoid.
     // Sharp claim, pinned by KEY: the bucketed plan has NO exchange on
     // a bare assembly key (paragraph_id / entity_id); the plain plan
-    // has 4 (the control that keeps the pin non-vacuous).
+    // has exactly one, the paragraph pass (the control that keeps the
+    // pin non-vacuous).
     import graft.queries.{DrupalFixture, Members, MembersCatalog}
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -142,12 +132,12 @@ class ScaleSpec extends AnyFunSuite {
         })
       assert(bareAssemblyKeys(bucketed).isEmpty,
         s"bucketed full plan must not shuffle on bare assembly keys, got ${bareAssemblyKeys(bucketed)}")
-      assert(bareAssemblyKeys(plain).size >= 4,
-        "control: plain storage should shuffle the 4-way assembly")
+      assert(bareAssemblyKeys(plain) == Seq("paragraph_id"),
+        s"control: plain storage should shuffle the paragraph pass once, got ${bareAssemblyKeys(plain)}")
       assert(bucketed.size <= 12,
         s"bucketed full plan regressed past the documented bound: ${bucketed.size} exchanges")
-      assert(plain.size - bucketed.size >= 8,
-        s"bucketing must eliminate the assembly + customer-side exchanges " +
+      assert(plain.size - bucketed.size >= 1,
+        s"bucketing must eliminate the paragraph pass's exchange " +
           s"(plain ${plain.size}, bucketed ${bucketed.size})")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -1470,32 +1460,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(merged.except(rebuilt).count() == 0 && rebuilt.except(merged).count() == 0,
       "segment-table merge must equal the full batch rebuild")
     CacheScope.releaseAll()
-  }
-
-  test("DrupalFixture base cache: per-query release leaves bases pinned, session end empties") {
-    // the r15 verdict's lifecycle contract: a per-query releaseAll()
-    // must NOT drop the base frames the mbr/mh/eav bench family
-    // amortizes (the r15 regression), while visiting a DIFFERENT
-    // fixture dir evicts the previous dir's frames (the leak the r15
-    // hook was closing) and session end releases everything
-    import graft.queries.DrupalFixture
-    val d1 = "/root/testdata/sf0.001"
-    val d2 = "/root/testdata/sf0.01"
-    CacheScope.releaseSession() // clean slate
-    DrupalFixture.paragraphs(spark, d1).count()
-    assert(DrupalFixture.pinnedBaseDirs == Set(d1))
-    CacheScope.releaseAll()
-    assert(DrupalFixture.pinnedBaseDirs == Set(d1),
-      "per-query release must leave the base cache pinned (r15 regression)")
-    DrupalFixture.paragraphs(spark, d2).count()
-    assert(DrupalFixture.pinnedBaseDirs == Set(d2),
-      "a new fixture dir must evict the previous dir's frames (the leak bound)")
-    DrupalFixture.paragraphs(spark, d1).count()
-    assert(DrupalFixture.pinnedBaseDirs == Set(d1),
-      "alternating dirs must pin at most ONE dir's frames")
-    CacheScope.releaseSession()
-    assert(DrupalFixture.pinnedBaseDirs.isEmpty,
-      "session end must release every base frame")
   }
 
   test("z-order assignment: the only unpartitioned window is the card-sized bucket frame") {
