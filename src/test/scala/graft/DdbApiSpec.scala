@@ -76,34 +76,33 @@ class DdbApiSpec extends AnyFunSuite {
     assert(Members.byEmail(spark, d, email).count() == 1)
   }
 
-  test("Members.eavPass equals the chained equi-joins, fan-out and NULL keys included") {
-    import spark.implicits._
-    import org.apache.spark.sql.DataFrame
-    // key 1: two base rows × two f1 rows (fan-out on both sides); 2: f1
-    // only; 3: two f2 rows; 4: no field row; 5 / 6: field-only keys;
-    // NULL keys on the base side and on both field sides
-    val base = Seq((Some(1L), "a"), (Some(1L), "a2"), (Some(2L), "b"), (Some(3L), "c"),
-      (Some(4L), "d"), (None, "n1"), (None, "n2")).toDF("k", "b")
-    val f1 = Seq((Some(1L), 10), (Some(1L), 11), (Some(2L), 20), (None, 99), (Some(5L), 50))
-      .toDF("k", "x")
-    val f2 = Seq((Some(1L), "p"), (Some(3L), "q"), (Some(3L), "q2"), (None, "z"), (Some(6L), "o"))
-      .toDF("k", "y")
-    def chained(fields: (DataFrame, String)*): DataFrame =
-      fields.zipWithIndex.foldLeft(base) { case (acc, ((f, how), i)) =>
-        acc.join(f.withColumnRenamed("k", s"k$i"), col("k") === col(s"k$i"), how).drop(s"k$i")
+  test("membership histories equal their oracle SQL when paragraphs and links repeat") {
+    // sf0.001 orders plus a copy of the home-club-linked ones under the
+    // next customer: each copied paragraph has two p rows, two rows in
+    // every attribute table and two home-club links, so every chained
+    // join fans out; the oracle's JOINs over the same rows do the same
+    import graft.sources.Tables
+    val s2 = spark.newSession() // the oracle's `orders` / `customer` views stay here
+    val orders = Tables.t(s2, d, "orders")
+    val doubled = orders.unionByName(orders
+      .filter(col("o_orderkey") % 3 === 0 && col("o_orderkey") < 2000)
+      .withColumn("o_custkey", col("o_custkey") + 1))
+    val customer = Tables.t(s2, d, "customer")
+    doubled.createOrReplaceTempView("orders")
+    customer.createOrReplaceTempView("customer")
+    val oracle = MembersCatalog.entries.toMap.map { case (k, q) => k -> q.oracle.get }
+    DrupalFixture.withBases(Map("orders" -> doubled, "customer" -> customer)) {
+      for ((name, got) <- Seq(
+          "mh1_membership_history" -> Members.historyAll(s2, d),
+          "mh2_intl_history" -> Members.internationalHistoryAll(s2, d))) {
+        val want = s2.sql(oracle(name))
+        assert(got.columns.toSeq == want.columns.toSeq, name)
+        assert(got.count() == want.count(), name)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, name)
       }
-    def same(got: DataFrame, want: DataFrame, rows: Long): Unit = {
-      assert(got.columns.toSeq == want.columns.toSeq)
-      assert(want.count() == rows && got.count() == rows)
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+      // non-vacuity: the copied home-club paragraphs do fan out
+      assert(Members.historyAll(s2, d).groupBy("paragraph_id").count()
+        .filter(col("count") > 1).count() > 0)
     }
-    for ((h1, h2, rows) <- Seq(("inner", "left", 5L), ("left", "left", 10L),
-        ("left", "inner", 6L), ("inner", "inner", 4L)))
-      same(Members.eavPass(base, "k", ("f1", h1, f1), ("f2", h2, f2)),
-        chained(f1 -> h1, f2 -> h2), rows)
-    // a "list" field holds the left join's matches, collected per base row
-    same(Members.eavPass(base, "k", ("f2", "list", f2))
-        .select(col("k"), col("b"), explode_outer(col("f2.y")).as("y")),
-      chained(f2 -> "left"), 8L)
   }
 }
