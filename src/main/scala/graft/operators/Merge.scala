@@ -43,9 +43,11 @@ object Merge {
 
   /** Retain / GC (S10, `db/src/lib.rs:16-76`): keep only target rows whose
     * key IS in the freshly-synced keep-set — a left-semi join (the deleted
-    * set is the left-anti complement). */
+    * set is the left-anti complement). A semi or anti join's result does
+    * not depend on duplicate keep rows, so the keep side is not made
+    * distinct (that would plan an aggregate and a shuffle under it). */
   def retain(target: DataFrame, keep: DataFrame, keys: Seq[String]): DataFrame =
-    target.join(keep.select(keys.map(col): _*).distinct(), keys, "left_semi")
+    target.join(keep.select(keys.map(col): _*), keys, "left_semi")
 
   /** Rows retain() would delete — surfaced for stats (D6) and for the
     * audience delete flow (S12, `mailchimp/src/members.rs:68-97`):
@@ -53,6 +55,6 @@ object Merge {
     * never deleted). */
   def retainDeletes(target: DataFrame, keep: DataFrame, keys: Seq[String], exempt: Option[Column] = None): DataFrame = {
     val base = exempt.map(e => target.filter(!e)).getOrElse(target)
-    base.join(keep.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    base.join(keep.select(keys.map(col): _*), keys, "left_anti")
   }
 }

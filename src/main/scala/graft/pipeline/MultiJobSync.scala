@@ -69,7 +69,18 @@ object JobStore {
   * jobs in flight, a failing job is recorded (and logged) but never
   * aborts the rest, and results come back keyed by job id. Spark
   * supports concurrent actions from multiple driver threads, so each
-  * job's pipeline runs as an independent Future over the shared session. */
+  * job's sink pushes run as an independent Future over the shared
+  * session.
+  *
+  * One call reads one snapshot at one `asOf`, so its jobs share one
+  * audience frame ([[MailSyncPipeline.audienceRows]], every job's rows
+  * tagged by job id): [[syncMany]] persists it, materializes it once
+  * before the pool starts, and unpersists it after the pool drains; each
+  * job reads only its own slice. The frame's lifetime is the call's, not
+  * [[graft.CacheScope]]'s. Failure isolation holds per job for its sink
+  * pushes; a failed shared build (say, a missing snapshot dir) fails
+  * every job of the call, each `JobResult` carrying the error, and
+  * touches no sink. */
 object MultiJobSync {
 
   final case class JobResult(jobId: Long, name: String,
@@ -98,37 +109,60 @@ object MultiJobSync {
     } + "\""
   }
 
-  /** Run one job end-to-end against its list's sink. */
-  def runJob(spark: SparkSession, dir: String, job: SyncJob): MailSyncPipeline.JobStats = {
+  /** The jobs' shared audience frame, persisted and materialized; on a
+    * failed build nothing stays cached. */
+  private def sharedAudience(spark: SparkSession, dir: String,
+      jobs: Seq[SyncJob]): Try[DataFrame] = Try {
+    val audience = MailSyncPipeline.audienceRows(spark, dir, jobs).persist()
+    try { audience.count(); audience }
+    catch { case e: Throwable => audience.unpersist(); throw e }
+  }
+
+  /** Push one job's slice of the shared audience frame through its
+    * list's sink: S11 upsert, S12 retain, S13 tag updates. */
+  private def pushJob(spark: SparkSession, audience: DataFrame,
+      job: SyncJob): MailSyncPipeline.JobStats = {
     val sink = new AudienceSink(sinkId = s"job-${job.list}")
-    val rows = MailSyncPipeline.audienceRowsFor(spark, dir, job).cache()
-    try {
-      val upserted = sink.upsertMany(rows)
-      val deleted = sink.retain(spark, rows.select("id"))
-      val tagOps = sink.updateTags(MailSyncPipeline.memberTagUpdates(rows))
-      MailSyncPipeline.JobStats(upserted, deleted, tagOps)
-    } finally rows.unpersist()
+    val rows = MailSyncPipeline.jobRows(audience, job)
+    val upserted = sink.upsertMany(rows)
+    val deleted = sink.retain(spark, rows.select("id"))
+    val tagOps = sink.updateTags(MailSyncPipeline.memberTagUpdates(rows))
+    MailSyncPipeline.JobStats(upserted, deleted, tagOps)
+  }
+
+  /** Run one job end-to-end against its list's sink: the [[syncMany]]
+    * path with one job, throwing its error. */
+  def runJob(spark: SparkSession, dir: String, job: SyncJob): MailSyncPipeline.JobStats = {
+    val audience = sharedAudience(spark, dir, Seq(job)).get
+    try pushJob(spark, audience, job) finally audience.unpersist()
   }
 
   def syncMany(spark: SparkSession, dir: String, jobsIn: Seq[SyncJob],
       concurrency: Int = 20): Map[Long, JobResult] = {
     require(concurrency >= 1, s"syncMany concurrency must be >= 1, got $concurrency")
     if (jobsIn.isEmpty) return Map.empty
-    val pool = Executors.newFixedThreadPool(math.min(concurrency, jobsIn.size))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = jobsIn.map { job =>
-        Future(Try(runJob(spark, dir, job))).map {
-          case Success(stats) =>
-            job.id -> JobResult(job.id, job.name, Some(stats), None)
-          case Failure(e) =>
-            System.err.println(s"[sync] job ${job.id} '${job.name}' failed: ${e.getMessage}")
-            job.id -> JobResult(job.id, job.name, None,
-              Some(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
-        }
+    def result(job: SyncJob, outcome: Try[MailSyncPipeline.JobStats]): (Long, JobResult) =
+      outcome match {
+        case Success(stats) =>
+          job.id -> JobResult(job.id, job.name, Some(stats), None)
+        case Failure(e) =>
+          System.err.println(s"[sync] job ${job.id} '${job.name}' failed: ${e.getMessage}")
+          job.id -> JobResult(job.id, job.name, None,
+            Some(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
       }
-      Await.result(Future.sequence(futures), Duration.Inf).toMap
-    } finally pool.shutdown()
+    sharedAudience(spark, dir, jobsIn) match {
+      case Failure(e) => jobsIn.map(result(_, Failure(e))).toMap
+      case Success(audience) =>
+        val pool = Executors.newFixedThreadPool(math.min(concurrency, jobsIn.size))
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        try {
+          val futures = jobsIn.map(job => Future(result(job, Try(pushJob(spark, audience, job)))))
+          Await.result(Future.sequence(futures), Duration.Inf).toMap
+        } finally {
+          pool.shutdown()
+          audience.unpersist()
+        }
+    }
   }
 
   /** The full `sync-mail run` surface: jobs table → sync_many →
@@ -137,9 +171,9 @@ object MultiJobSync {
       concurrency: Int = 20): Map[Long, JobResult] = {
     val results = syncMany(spark, dir, JobStore.fromDf(jobsDf), concurrency)
     results.toSeq.sortBy(_._1).foreach { case (_, r) => println(r.statsJson) }
-    // driver contract (CacheScope): all jobs have completed (syncMany
-    // joins the pool), so release AFTER the last concurrent job — not
-    // per-job, which could unpersist a sibling's live intermediate
+    // syncMany has already unpersisted its shared audience frame; the
+    // per-query CacheScope release runs here, after the pool has drained
+    // (CacheScope's concurrency contract)
     graft.CacheScope.releaseAll()
     results
   }

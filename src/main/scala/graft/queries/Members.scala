@@ -234,7 +234,7 @@ object DrupalFixture {
 }
 
 /** The composed flagship: `aci-ddb members by-club <uid>` re-expressed as
-  * ONE Catalyst plan — scope semi-join (J5) → EAV membership assembly
+  * ONE Catalyst plan — scope join (J5) → EAV membership assembly
   * (J1) → date-window filters (P6) → flags rollup (A2) → active-pick
   * argmax (J7, deterministic min-paragraph tie-break per the reference's
   * own MIN(paragraph_id) history convention, SURVEY §7.4.1) → wide
@@ -245,18 +245,28 @@ object DrupalFixture {
   * dedupe_members (:16-55). Signatures mirror the reference public fns
   * (`ddb/src/members.rs:7-38`).
   *
+  * The scope is a key of the assembly: [[scoped]] builds the members of
+  * many scopes in one plan, each row tagged with its scope's id, and
+  * the one-scope calls (`byClub` / `byRegion` / `all` / `allRolling`)
+  * are that plan with a single scope.
+  *
   * Scale shape: the orders-derived EAV attribute joins co-shuffle on
   * paragraph_id (one key), flags is one hash shuffle on uid, all club /
   * region / taxonomy dims are broadcast, and the scope list is a
-  * broadcast semi-join — the fact side shuffles twice (paragraph_id,
-  * uid) regardless of corpus size.
+  * broadcast join — the fact side shuffles twice (paragraph_id, uid)
+  * regardless of corpus size.
   */
 object Members {
   import DrupalFixture._
 
+  /** One member scope of [[scoped]], tagged `id`: club `club` plus every
+    * club of region `region` (the reference's by-club / by-region
+    * parameters), or every member when both are absent (`all`). */
+  final case class Scope(id: Long, club: Option[Long] = None, region: Option[Long] = None)
+
   /** All current members (no scope restriction). */
   def all(s: SparkSession, d: String, asOf: String = Catalog.AsOf): DataFrame =
-    assemble(s, d, scope = None, asOf)
+    assemble(s, d, Seq(Scope(0)), asOf).drop("scope")
 
   /** The reference's `all()` proper (FETCH_ALL_MEMBERS_QUERY +
     * `parent_field_name = 'field_home_club'`, `ddb/src/members.rs:7-14`,
@@ -265,17 +275,26 @@ object Members {
     * BEFORE asOf still counts (recently-lapsed members are kept for
     * outreach), unlike the by-club query's hard leave >= asOf. */
   def allRolling(s: SparkSession, d: String, asOf: String = Catalog.AsOf): DataFrame =
-    assemble(s, d, scope = None, asOf, rollingYear = true, homeClubOnly = true)
+    assemble(s, d, Seq(Scope(0)), asOf, rollingYear = true, homeClubOnly = true).drop("scope")
 
   /** Members of one club. */
   def byClub(s: SparkSession, d: String, clubNid: Long,
       asOf: String = Catalog.AsOf): DataFrame =
-    assemble(s, d, Some((Some(clubNid), None)), asOf)
+    assemble(s, d, Seq(Scope(0, club = Some(clubNid))), asOf).drop("scope")
 
   /** Members of every club in a region. */
   def byRegion(s: SparkSession, d: String, regionNid: Long,
       asOf: String = Catalog.AsOf): DataFrame =
-    assemble(s, d, Some((None, Some(regionNid))), asOf)
+    assemble(s, d, Seq(Scope(0, region = Some(regionNid))), asOf).drop("scope")
+
+  /** The members of every scope in `scopes` from one plan, each row
+    * tagged with its scope's id in a leading `scope` column. A scope's
+    * slice equals its one-scope call: the assembly, the flags rollup and
+    * the email dedupe are all keyed by scope, so scopes that share a
+    * member never see each other's rows. Scope ids must be distinct. */
+  def scoped(s: SparkSession, d: String, scopes: Seq[Scope],
+      asOf: String = Catalog.AsOf): DataFrame =
+    assemble(s, d, scopes, asOf)
 
   /** Point lookups over the assembled members (reference by_uid/by_email,
     * `ddb/src/members.rs:57-79`). */
@@ -382,9 +401,10 @@ object Members {
     all.join(all.groupBy(keys.map(col): _*).agg(min(col("paragraph_id")).as("paragraph_id"))
       .select("paragraph_id"), "paragraph_id")
 
-  private def assemble(s: SparkSession, d: String,
-      scope: Option[(Option[Long], Option[Long])], asOf: String,
+  private def assemble(s: SparkSession, d: String, scopes: Seq[Scope], asOf: String,
       rollingYear: Boolean = false, homeClubOnly: Boolean = false): DataFrame = {
+    require(scopes.nonEmpty && scopes.map(_.id).distinct.size == scopes.size,
+      s"member scopes must be non-empty with distinct ids, got ${scopes.map(_.id).mkString(",")}")
     val asOfD = lit(asOf).cast("date")
     val dateOk =
       if (rollingYear)
@@ -394,29 +414,31 @@ object Members {
       else
         col("join_dt").isNotNull && col("join_dt") <= asOfD &&
           (col("leave_dt").isNull || col("leave_dt") >= asOfD)
-    // Scope: club branch UNION ALL region-expansion branch, exactly the
-    // reference's parameterized IN-subquery (NULL param → empty branch).
-    // The semi-join is applied to the CLUB ATTRIBUTE TABLE, before any
-    // paragraph join — club_target is functionally pc's column, so
-    // pruning pc prunes the same acp rows, but ~96% of paragraphs (one
-    // club of ~25) now drop before the 4-way assembly and the three
-    // flag joins instead of after. Catalyst does not push a left_semi
-    // below this join tree on its own (verified on the optimized plan),
-    // so the pushdown is done at authoring level.
-    val pcScoped = scope match {
-      case None => liveClubs(s, d)
-      case Some((clubNid, regionNid)) =>
-        val clubLit = clubNid.map(v => lit(v)).getOrElse(lit(null)).cast("long")
-        val regionLit = regionNid.map(v => lit(v)).getOrElse(lit(null)).cast("long")
-        val one = s.range(1).select(clubLit.as("club_nid"))
-          .filter(col("club_nid").isNotNull)
-        val regionClubs = clubRegion(s, d)
-          .filter(col("deleted") === "0" && col("region_target") === regionLit)
-          .select(col("entity_id").as("club_nid"))
-        val scopeDf = one.unionByName(regionClubs)
-        liveClubs(s, d).join(broadcast(scopeDf), col("club_target") === col("club_nid"),
-          "left_semi")
-    }
+    // Scope: each scoped paragraph is its live club attribute row tagged
+    // with the scope's id. A club/region scope's clubs are its club UNION
+    // ALL its region's clubs — the reference's parameterized IN-subquery
+    // (an absent param → an empty branch) — made distinct per scope, so a
+    // club named twice (itself and via its region) matches once, as IN
+    // does; the frame is one partition, so the distinct needs no
+    // exchange. It is applied to the CLUB ATTRIBUTE TABLE, before any
+    // paragraph join: club_target is functionally pc's column, so pruning
+    // pc prunes the same acp rows, but ~96% of paragraphs (one club of
+    // ~25) drop before the 4-way assembly and the three flag joins.
+    // Catalyst does not push such a join below this join tree on its own,
+    // so the pushdown is done at authoring level. An all-scope is the
+    // whole live club attribute, tagged and unioned in.
+    import s.implicits._
+    val (whole, part) = scopes.partition(sc => sc.club.isEmpty && sc.region.isEmpty)
+    val clubs = part.flatMap(sc => sc.club.map(sc.id -> _)).toDF("scope", "club_nid")
+    val regions = part.flatMap(sc => sc.region.map(sc.id -> _)).toDF("scope", "region_nid")
+    val regionClubs = clubRegion(s, d).filter(col("deleted") === "0")
+      .join(broadcast(regions), col("region_target") === col("region_nid"))
+      .select(col("scope"), col("entity_id").as("club_nid"))
+    val scopeClubs = clubs.unionByName(regionClubs).coalesce(1).distinct()
+    val live = liveClubs(s, d)
+    val pcScoped = whole.map(sc => live.withColumn("scope", lit(sc.id)))
+      .foldLeft(live.join(broadcast(scopeClubs), col("club_target") === col("club_nid"))
+        .drop("club_nid"))(_.unionByName(_))
     // FETCH_ALL's parent_field_name = 'field_home_club' analog: only
     // paragraphs referenced by a home-club user link (pruned on the club
     // attribute too, which the chain inner-joins).
@@ -429,15 +451,17 @@ object Members {
     val acp = paragraphChain(s, d, "membership", Some(pc)).filter(dateOk)
 
     // ---- flags: per-user membership-kind rollup (A2) ----
-    // One hash aggregate on uid computes BOTH the flags rollup (A2) and
-    // the active-pick argmax (J7): the pick is max over
+    // One hash aggregate per (scope, uid) computes BOTH the flags rollup
+    // (A2) and the active-pick argmax (J7): the pick is max over
     // (join_dt, -paragraph_id) structs — latest join date, lowest
     // paragraph_id tie-break, identical to the oracle's
     // row_number() OVER (ORDER BY join_dt DESC, paragraph_id ASC) = 1 —
     // so the acp subtree is consumed once and the plan has a single
-    // uid shuffle instead of window + re-join.
+    // uid shuffle instead of window + re-join. The shuffle is on uid
+    // alone, so the wide assembly's uid joins reuse its partitioning.
     val flags = acp.transform(withLinks(s, d, byUser = true))
-      .groupBy(col("uid"))
+      .repartition(col("uid"))
+      .groupBy(col("scope"), col("uid"))
       .agg(
         greatest(max(coalesce(col("uhc_hit"), lit(0))),
           max(coalesce(col("uic_hit"), lit(0)))).as("member_flag"),
@@ -484,6 +508,7 @@ object Members {
         col("pm_hit").isNull &&
         (col("member_flag") === 1 || col("affiliate_flag") === 1))
       .select(
+        col("scope"),
         col("uid"),
         to_date(from_unixtime(col("login"))).as("last_login"),
         col("first_name"), col("last_name"), col("email"),
@@ -514,10 +539,10 @@ object Members {
         col("pp_email").as("partner_email"),
         col("pp_birth").as("partner_birthday"))
 
-    // ---- dedupe_members (A6): regulars beat affiliates per email;
-    // deterministic uid tie-break (the reference HashMap is arbitrary,
-    // SURVEY §7.4.1) ----
-    val dw = org.apache.spark.sql.expressions.Window.partitionBy(col("email"))
+    // ---- dedupe_members (A6): regulars beat affiliates per email in
+    // each scope; deterministic uid tie-break (the reference HashMap is
+    // arbitrary, SURVEY §7.4.1) ----
+    val dw = org.apache.spark.sql.expressions.Window.partitionBy(col("scope"), col("email"))
       .orderBy(when(col("member_type") === "regular", 0).otherwise(1).asc, col("uid").asc)
     assembled.withColumn("ddrn", row_number().over(dw)).filter(col("ddrn") === 1).drop("ddrn")
   }

@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   *
   *  - S11 `upsertMany`: members pushed from executors in chunks of ≤300
   *    per batch (`mailchimp/src/members.rs:130-134` — 500 documented as
-  *    timing out), bounded sink-side parallelism via `repartition(n)`
-  *    (reference: 8 concurrent batches), per-batch retry with exponential
-  *    backoff capped at 5 s (`mailchimp/src/lib.rs:331-364`).
+  *    timing out), at most n batch streams at once via `coalesce(n)`
+  *    (reference: ≤8 concurrent batches, `try_for_each_concurrent(8)` —
+  *    a ceiling), per-batch retry with exponential backoff capped at
+  *    5 s (`mailchimp/src/lib.rs:331-364`).
   *  - S12 `retain`: delete audience rows whose id is NOT in the keep set,
   *    never touching `cleaned` members (`mailchimp/src/members.rs:68-97`).
   *    The keep set is a DataFrame and the doomed set is a distributed
@@ -123,10 +124,17 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
       .toDF("id", "status")
   }
 
-  /** The one executor push loop behind S11–S13: `data` is spread over
-    * `sinkPartitions` tasks (the bounded sink-side parallelism), each task
-    * posts its rows in ≤`size` batches, and every batch goes through
-    * [[AudienceSink.withRetry]]. Returns the rows posted.
+  /** The one executor push loop behind S11–S13: `data` is coalesced to
+    * at most `sinkPartitions` tasks (the bounded sink-side parallelism),
+    * each task posts its rows in ≤`size` batches, and every batch goes
+    * through [[AudienceSink.withRetry]]. Returns the rows posted.
+    *
+    * The coalesce adds no shuffle, so the bound also applies to the stage
+    * that computes `data`: it runs in at most `sinkPartitions` tasks.
+    * Callers therefore pass a cached frame (the mail-sync jobs push
+    * slices of their persisted audience frame; `retain` pushes its
+    * persisted doomed set), so the push reads the cache rather than
+    * recomputing a wide plan at reduced parallelism.
     *
     * The count rides a LongAccumulator inside the SAME pass that posts
     * the batches, so the upstream plan executes once per sink call (a
@@ -139,7 +147,7 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
       decode: Row => T)(post: (String, Seq[T]) => Unit): Long = {
     val (sid, retries) = (sinkId, maxRetries)
     val sent = data.sparkSession.sparkContext.longAccumulator(counter)
-    data.repartition(sinkPartitions).foreachPartition { it: Iterator[Row] =>
+    data.coalesce(sinkPartitions).foreachPartition { it: Iterator[Row] =>
       it.map(decode).grouped(size).foreach { batch =>
         withRetry(retries)(post(sid, batch))
         sent.add(batch.size)

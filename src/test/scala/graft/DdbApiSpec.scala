@@ -76,6 +76,43 @@ class DdbApiSpec extends AnyFunSuite {
     assert(Members.byEmail(spark, d, email).count() == 1)
   }
 
+  test("Members.scoped: each scope's slice equals its one-scope oracle SQL") {
+    import graft.sources.Tables
+    val s2 = spark.newSession() // the oracle's fixture views stay here
+    for (t <- Seq("orders", "customer", "nation", "region"))
+      Tables.t(s2, d, t).createOrReplaceTempView(t)
+    // the oracle SQL is DuckDB's; two spellings differ in Spark
+    def oracle(name: String) = s2.sql(MembersCatalog.entries.toMap.apply(name).oracle.get
+      .replace("string_agg(v, ',' ORDER BY v)", "array_join(array_sort(collect_list(v)), ',')")
+      .replace("VARCHAR", "STRING"))
+    // club 7 lies in region 2: scope 1 overlaps scope 2, and scope 4
+    // names club 7 both itself and through its region
+    assert(DrupalFixture.clubRegion(s2, d).filter(col("entity_id") === 7L)
+      .select("region_target").collect().map(_.getLong(0)).toSeq == Seq(2L))
+    val scoped = Members.scoped(s2, d, Seq(Members.Scope(1, club = Some(7L)),
+      Members.Scope(2, region = Some(2L)), Members.Scope(3),
+      Members.Scope(4, club = Some(7L), region = Some(2L)))).persist()
+    try {
+      def slice(id: Long) = scoped.filter(col("scope") === id).drop("scope")
+      def same(name: String, got: org.apache.spark.sql.DataFrame,
+          want: org.apache.spark.sql.DataFrame): Unit = {
+        assert(got.columns.toSeq == want.columns.toSeq, name)
+        val n = want.count()
+        assert(n > 0 && got.count() == n, name)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, name)
+      }
+      same("mbr1_members_by_club", slice(1), oracle("mbr1_members_by_club"))
+      same("mbr2_members_by_region", slice(2), oracle("mbr2_members_by_region"))
+      same("mbr3_members_all", slice(3), oracle("mbr3_members_all"))
+      // the IN-subquery's set semantics: a club named twice matches once
+      same("club 7 + region 2", slice(4), slice(2))
+      assert(slice(4).select("uid").distinct().count() == slice(4).count())
+      // non-vacuity: the club and region scopes share members
+      assert(scoped.filter(col("scope").isin(1L, 2L)).groupBy("uid").count()
+        .filter(col("count") >= 2).count() > 0)
+    } finally scoped.unpersist()
+  }
+
   test("membership histories equal their oracle SQL when paragraphs and links repeat") {
     // sf0.001 orders plus a copy of the home-club-linked ones under the
     // next customer: each copied paragraph has two p rows, two rows in

@@ -101,11 +101,52 @@ class MultiJobSyncSpec extends AnyFunSuite {
     assert(e.getMessage.contains("concurrency"))
   }
 
+  test("a 3-job syncMany evaluates the member assembly once") {
+    import graft.queries.{DrupalFixture, Members}
+    // the assembly reads the region base once (its region-number
+    // lookup), so each evaluation of the assembly bumps the probe once
+    // per region row; non-deterministic, so no filter is pushed below it
+    val evals = spark.sparkContext.longAccumulator("assembly_evals")
+    val bump = udf { (k: Long) => evals.add(1); k }.asNondeterministic()
+    val region = graft.sources.Tables.t(spark, dir, "region")
+      .withColumn("r_regionkey", bump(col("r_regionkey")))
+    val jobs = Seq(SyncJob(1, "club-7", "mj-once1", club = Some(7L)),
+      SyncJob(2, "region-2", "mj-once2", region = Some(2L)), SyncJob(3, "all", "mj-once3"))
+    DrupalFixture.withBases(Map("region" -> region)) {
+      Members.all(spark, dir).count()
+      val once = evals.value
+      evals.reset()
+      val results = MultiJobSync.syncMany(spark, dir, jobs, concurrency = 3)
+      assert(results.values.forall(r => r.error.isEmpty && r.stats.exists(_.upserted > 0)),
+        results.values.map(_.statsJson).mkString("\n"))
+      assert(once > 0 && evals.value == once,
+        s"syncMany evaluated the member assembly ${evals.value.toDouble / once} times, expected 1")
+    }
+  }
+
+  test("a failed shared build fails every job of the call and touches no sink") {
+    import spark.implicits._
+    val jobs = Seq(SyncJob(1, "club-7", "mj-nodir1", club = Some(7L)),
+      SyncJob(2, "all", "mj-nodir2"))
+    val seeded = new AudienceSink(sinkId = "job-mj-nodir1")
+    seeded.upsertMany(Seq(("old", "old@x.org", "subscribed", "{}"))
+      .toDF("id", "email", "status", "merge_json"))
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val results = MultiJobSync.syncMany(spark, s"$dir/no-such-snapshot", jobs, concurrency = 2)
+    assert(results.keySet == Set(1L, 2L))
+    for (r <- results.values)
+      assert(r.stats.isEmpty && r.error.exists(_.nonEmpty), r.statsJson)
+    assert(results(1).error == results(2).error, "both jobs carry the one build error")
+    assert(seeded.allIds == Set("old") && new AudienceSink(sinkId = "job-mj-nodir2").size == 0)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty,
+      "a failed build must leave nothing cached")
+  }
+
   test("memberAudienceRows evaluates each member row once") {
     val evals = spark.sparkContext.longAccumulator("member_evals")
     val bump = udf { (id: Long) => evals.add(1); id }
     // every member has a partner, so a per-branch re-read would show 2x
-    val members = spark.range(0, 40, 1, 4).select(
+    val members = spark.range(0, 40, 1, 4).select(lit(1L).as("scope"),
       concat(lit("m"), col("id"), lit("@x.org")).as("email"),
       lit("Ann").as("first_name"), concat(lit("L"), col("id")).as("last_name"),
       lit(null).cast("date").as("birthday"),
@@ -114,8 +155,8 @@ class MultiJobSyncSpec extends AnyFunSuite {
       concat(lit("p"), col("id"), lit("@x.org")).as("partner_email"),
       lit("Bob").as("partner_first_name"), lit("L").as("partner_last_name"),
       lit(null).cast("date").as("partner_birthday"))
-    val rows = MailSyncPipeline.memberAudienceRows(members,
-      graft.sources.MergeFieldCatalog.all).collect()
+    val rows = MailSyncPipeline.jobRows(MailSyncPipeline.memberAudienceRows(members),
+      SyncJob(1, "all", "x")).collect()
     assert(rows.length == 80 && rows.count(_.getAs[String]("role") == "partner") == 40)
     assert(evals.value == 40, s"member rows evaluated ${evals.value} times, expected 40")
   }

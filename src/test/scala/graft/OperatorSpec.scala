@@ -67,6 +67,37 @@ class OperatorSpec extends AnyFunSuite {
     assert(del.select("id").as[Int].collect().toSet == Set(3))
   }
 
+  test("keep-side semi/anti joins: duplicate and NULL keep keys need no distinct") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val target = Seq((Some(1L), "a"), (Some(2L), "b"), (Some(3L), "c"), (None, "n"),
+      (Some(1L), "a2")).toDF("k", "v")
+    val keep = Seq(Some(1L), Some(1L), Some(3L), Some(3L), None, None, Some(9L)).toDF("k")
+    val dim = keep.select(col("k").as("dim_k"))
+    val cases = Seq(
+      ("retain", Merge.retain(target, keep, Seq("k")),
+        target.join(keep.distinct(), Seq("k"), "left_semi")),
+      ("retainDeletes", Merge.retainDeletes(target, keep, Seq("k")),
+        target.join(keep.distinct(), Seq("k"), "left_anti")),
+      ("fkFilter", new graft.pipeline.SyncPipeline(spark).fkFilter(target, "k", dim, "dim_k"),
+        target.join(dim.select(col("dim_k").as("k")).distinct(), Seq("k"), "left_semi")))
+    for ((name, got, want) <- cases) {
+      val n = want.count()
+      assert(n > 0 && got.count() == n, name)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, name)
+      // the keep side is joined as it is: the executed plan (after the
+      // counts above) has no aggregate, and so no shuffle under one
+      val aggs = nodes(got.queryExecution.executedPlan).collect { case a: BaseAggregateExec => a }
+      assert(aggs.isEmpty, s"$name plans an aggregate over its keep side:\n${got.queryExecution.executedPlan}")
+    }
+  }
+
   test("idForEmail matches sha256/base64url vector and normalizes") {
     val df = Seq(("  X@Y.com  "), ("x@y.com")).toDF("email")
       .select(F.idForEmail(col("email")).as("id"))

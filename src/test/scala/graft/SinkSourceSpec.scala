@@ -69,6 +69,39 @@ class SinkSourceSpec extends AnyFunSuite {
       s"retain evaluated the keep-set plan ${SinkSourceSpec.planEvals.get() / 20.0} times")
   }
 
+  test("audience sink: a push coalesces to its task bound without a shuffle") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val pushes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "foreachPartition") pushes.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val sink = new AudienceSink(sinkId = "t_noshuffle", batchSize = 10, sinkPartitions = 2)
+      val members = spark.range(0, 40, 1, 4).select(format_string("m%03d", col("id")).as("id"),
+        lit("u@x.org").as("email"), lit("subscribed").as("status"), lit("{}").as("merge_json"))
+      assert(sink.upsertMany(members) == 40 && sink.size == 40)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (pushes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(!pushes.isEmpty, "the push's execution was not observed")
+      pushes.forEach { p =>
+        assert(!nodes(p).exists(_.isInstanceOf[ShuffleExchangeExec]), s"push plan shuffles:\n$p")
+        assert(p.execute().getNumPartitions <= 2, s"push runs more than 2 tasks:\n$p")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("audience sink: transient batch failures retried to success") {
     val sink = new AudienceSink(sinkId = "t2", batchSize = 50, sinkPartitions = 2)
     sink.injectTransientFailures(2)
