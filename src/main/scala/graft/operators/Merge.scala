@@ -22,16 +22,17 @@ object Merge {
     * plain `=` join): NULLs never conflict, so a NULL-key source row is
     * an insert, never an update of a NULL-key target row. "Source wins"
     * is decided by a non-null marker tagged on the source side — not by
-    * key null-ness — so it stays correct even for NULL-key rows. */
+    * key null-ness — so it stays correct even for NULL-key rows. The
+    * result keeps the target's column order, so a table rewritten by
+    * upserts keeps one schema from version to version. */
   def upsert(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
     val cols = target.columns.toSeq
-    val dataCols = cols.filterNot(keys.contains)
     val t = target.alias("t")
     val s = source.withColumn("__src", lit(1)).alias("s")
     val joined = t.join(s, keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "full_outer")
-    val out = keys.map(k => coalesce(col(s"s.$k"), col(s"t.$k")).as(k)) ++
-      dataCols.map(c => when(col("s.__src").isNotNull, col(s"s.$c"))
-        .otherwise(col(s"t.$c")).as(c))
+    val out = cols.map(c =>
+      if (keys.contains(c)) coalesce(col(s"s.$c"), col(s"t.$c")).as(c)
+      else when(col("s.__src").isNotNull, col(s"s.$c")).otherwise(col(s"t.$c")).as(c))
     joined.select(out: _*)
   }
 
@@ -47,7 +48,7 @@ object Merge {
     * not depend on duplicate keep rows, so the keep side is not made
     * distinct (that would plan an aggregate and a shuffle under it). */
   def retain(target: DataFrame, keep: DataFrame, keys: Seq[String]): DataFrame =
-    target.join(keep.select(keys.map(col): _*), keys, "left_semi")
+    keyFilter(target, keep, keys, "left_semi")
 
   /** Rows retain() would delete — surfaced for stats (D6) and for the
     * audience delete flow (S12, `mailchimp/src/members.rs:68-97`):
@@ -55,6 +56,14 @@ object Merge {
     * never deleted). */
   def retainDeletes(target: DataFrame, keep: DataFrame, keys: Seq[String], exempt: Option[Column] = None): DataFrame = {
     val base = exempt.map(e => target.filter(!e)).getOrElse(target)
-    base.join(keep.select(keys.map(col): _*), keys, "left_anti")
+    keyFilter(base, keep, keys, "left_anti")
   }
+
+  /** The rows of `target` whose `keys` do (`left_semi`) or do not
+    * (`left_anti`) occur in `keep`, in `target`'s column order: a USING
+    * join would move the keys first, and a table GC'd through it would
+    * change schema (and so its scans' generated code) between versions. */
+  private[graft] def keyFilter(target: DataFrame, keep: DataFrame, keys: Seq[String],
+      how: String): DataFrame =
+    target.join(keep.select(keys.map(col): _*), keys, how).select(target.columns.map(col): _*)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.FloatDotProduct
@@ -807,10 +807,10 @@ object Similarity {
       k: Int, beam: Int = 8, hops: Int = 3): DataFrame = {
     require(k >= 1 && beam >= 1 && hops >= 1,
       s"k/beam/hops must be >= 1, got $k/$beam/$hops")
-    val (adj, v, q) = walkFrames(vectors, graph, queries)
+    val (adj, v, q, nQ) = walkFrames(vectors, graph, queries)
     val visited0 = q.select(col("query_id"), col("query_id").as("node_id"),
       lit(1.0).as("cos"))
-    walkLoop(adj, v, q, visited0, k, beam, hops)
+    walkLoop(adj, v, q, nQ, visited0, k, beam, hops)
   }
 
   /** sim11b — graph-walk ANN seeded from the coarse quantizer (the
@@ -838,7 +838,7 @@ object Similarity {
       s"k/beam/hops must be >= 1, got $k/$beam/$hops")
     require(nSeeds >= 1 && nSeeds <= beam,
       s"nSeeds must be in [1, beam=$beam], got $nSeeds")
-    val (adj, v, q) = walkFrames(vectors, graph, queries)
+    val (adj, v, q, nQ) = walkFrames(vectors, graph, queries)
     // sharedAssign (r19 opt): a caller holding the session's corpus
     // assignment against the SAME centroids (the catalog's
     // kmAssignShared) passes it here instead of re-running the
@@ -858,7 +858,7 @@ object Similarity {
       .join(v, Seq("node_id")).join(q, Seq("query_id"))
       .select(col("query_id"), col("node_id"),
         (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))
-    walkLoop(adj, v, q, visited0, k, beam, hops)
+    walkLoop(adj, v, q, nQ, visited0, k, beam, hops)
   }
 
   /** sim11c — layered graph-walk ANN (the HNSW move proper): the
@@ -922,10 +922,10 @@ object Similarity {
       hops: Int = 3, nProbe: Int = 2, nEntry: Int = 4,
       poolPerCell: Int = 8, midPermille: Int = 250, topCount: Int = 64,
       kUpper: Int = 5, cutLineage: Boolean = true): DataFrame = {
-    val (adj, v, q, visited0) = layeredPrep(vectors, graph, queries, cents,
+    val (adj, v, q, nQ, visited0) = layeredPrep(vectors, graph, queries, cents,
       k, beam, hops, nProbe, nEntry, poolPerCell, midPermille, topCount, kUpper,
       cutLineage)
-    walkLoop(adj, v, q, visited0, k, beam, hops)
+    walkLoop(adj, v, q, nQ, visited0, k, beam, hops)
   }
 
   /** sim11d — [[graphWalkLayered]] plus its EXACT-DOT cost accounting:
@@ -948,7 +948,7 @@ object Similarity {
       hops: Int = 3, nProbe: Int = 2, nEntry: Int = 4,
       poolPerCell: Int = 8, midPermille: Int = 250, topCount: Int = 64,
       kUpper: Int = 5, cutLineage: Boolean = true): (DataFrame, DataFrame) = {
-    val (adj, v, q, visited0) = layeredPrep(vectors, graph, queries, cents,
+    val (adj, v, q, nQ, visited0) = layeredPrep(vectors, graph, queries, cents,
       k, beam, hops, nProbe, nEntry, poolPerCell, midPermille, topCount, kUpper,
       cutLineage)
     // Lineage is CUT per hop with lazy localCheckpoints instead of
@@ -958,7 +958,7 @@ object Similarity {
     // codegen of those growing plans dominated the entry's wall time
     // (the data per hop is beam-bounded and tiny). The checkpointed
     // frames are Q·beam-row residues, freed with the session.
-    val hopParts = hopPartitions(q, beam)
+    val hopParts = hopPartitions(nQ, beam, q.sparkSession)
     var dotsEvents = visited0.select(col("query_id"), col("node_id"))
     var visited = visited0.localCheckpoint(false)
     var frontier = visited.select("query_id", "node_id")
@@ -1079,7 +1079,7 @@ object Similarity {
       hops: Int, nProbe: Int, nEntry: Int, poolPerCell: Int,
       midPermille: Int, topCount: Int, kUpper: Int,
       cutLineage: Boolean):
-      (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      (DataFrame, DataFrame, DataFrame, Long, DataFrame) = {
     require(k >= 1 && beam >= 1 && hops >= 1,
       s"k/beam/hops must be >= 1, got $k/$beam/$hops")
     require(nProbe >= 1 && nEntry >= 1 && nEntry <= poolPerCell,
@@ -1092,9 +1092,7 @@ object Similarity {
     require(kUpper >= 1, s"kUpper must be >= 1, got $kUpper")
     val (adj, v, pool) = layeredFrames(vectors, graph, cents,
       poolPerCell, midPermille, topCount, kUpper, cutLineage)
-    val q = graft.CacheScope.persist(withNorm(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")),
-      "query_id", "qv", "qn"))
+    val (q, nQ) = queryPanel(queries)
     val qCells = Clustering.assignTop(queries, cents, nProbe)
       .select(col("vec_id").as("query_id"), col("cid").as("cell"))
     val visited0 = qCells
@@ -1104,22 +1102,35 @@ object Similarity {
       .join(v, Seq("node_id")).join(q, Seq("query_id"))
       .select(col("query_id"), col("node_id"),
         (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))
-    (adj, v, q, visited0)
+    (adj, v, q, nQ, visited0)
   }
 
   /** The persisted frames every walk variant shares: symmetrized
-    * adjacency, normed corpus vectors, normed queries. */
+    * adjacency, normed corpus vectors, and the [[queryPanel]] with its
+    * row count. */
   private def walkFrames(vectors: DataFrame, graph: DataFrame,
-      queries: DataFrame): (DataFrame, DataFrame, DataFrame) = (
-    graft.CacheScope.persist(
+      queries: DataFrame): (DataFrame, DataFrame, DataFrame, Long) = {
+    val (q, nQ) = queryPanel(queries)
+    (graft.CacheScope.persist(
       graph.select(col("id_a").as("src"), col("id_b").as("dst"))
         .unionByName(graph.select(col("id_b").as("src"), col("id_a").as("dst")))),
-    graft.CacheScope.persist(withNorm(
-      vectors.select(col("vec_id").as("node_id"), col("embedding").as("nv")),
-      "node_id", "nv", "nn")),
-    graft.CacheScope.persist(withNorm(
+      graft.CacheScope.persist(withNorm(
+        vectors.select(col("vec_id").as("node_id"), col("embedding").as("nv")),
+        "node_id", "nv", "nn")),
+      q, nQ)
+  }
+
+  /** The normed query panel of a walk, persisted and materialized at
+    * once by one count, which sizes the hop exchanges
+    * ([[hopPartitions]]). Walks that run concurrently over one panel
+    * (sim11d's sweep) get it built once before they start, so they read
+    * a filled cache instead of racing to fill it. */
+  private[graft] def queryPanel(queries: DataFrame): (DataFrame, Long) = {
+    val q = graft.CacheScope.persist(withNorm(
       queries.select(col("vec_id").as("query_id"), col("embedding").as("qv")),
-      "query_id", "qv", "qn")))
+      "query_id", "qv", "qn"))
+    (q, q.count())
+  }
 
   /** The shared hop loop: expand frontier along adj, exact-score the
     * newly reached nodes, fold into visited, keep the best `beam` as
@@ -1147,19 +1158,16 @@ object Similarity {
     * ≤ queries × beam × degree rows of a few dozen bytes, so one
     * partition per ~64k query·beam units keeps partitions O(MB); the
     * count grows with the panel and is capped by the session's
-    * parallelism. The q panel is persisted by every caller, so the
-    * count() here is the panel's first materialization, not an extra
-    * corpus pass. */
-  private def hopPartitions(q: DataFrame, beam: Int): Int = {
-    val nQ = q.count()
+    * parallelism. `nQ` is the panel's row count, taken once when
+    * [[queryPanel]] materializes it. */
+  private def hopPartitions(nQ: Long, beam: Int, spark: SparkSession): Int =
     math.max(1L, math.min(
-      q.sparkSession.sparkContext.defaultParallelism.toLong,
+      spark.sparkContext.defaultParallelism.toLong,
       (nQ * beam + (1L << 16) - 1) / (1L << 16))).toInt
-  }
 
-  private def walkLoop(adj: DataFrame, v: DataFrame, q: DataFrame,
+  private def walkLoop(adj: DataFrame, v: DataFrame, q: DataFrame, nQ: Long,
       visited0: DataFrame, k: Int, beam: Int, hops: Int): DataFrame = {
-    val hopParts = hopPartitions(q, beam)
+    val hopParts = hopPartitions(nQ, beam, q.sparkSession)
     var visited = visited0
     var frontier = visited.select("query_id", "node_id")
     for (_ <- 1 to hops) {

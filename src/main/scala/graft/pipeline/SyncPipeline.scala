@@ -84,9 +84,10 @@ final class SyncPipeline(spark: SparkSession,
 
   /** FK-existence filter before load (J10, `sync-app/src/sync.rs:541-590`):
     * keep rows whose FK exists in `dim`; dropped count logged, not fatal.
-    * A left-semi join, so duplicate dim keys need no distinct. */
+    * A left-semi join, so duplicate dim keys need no distinct; rows keep
+    * their column order. */
   def fkFilter(rows: DataFrame, fk: String, dim: DataFrame, dimKey: String): DataFrame =
-    rows.join(dim.select(col(dimKey).as(fk)), Seq(fk), "left_semi")
+    Merge.keyFilter(rows, dim.select(col(dimKey).as(fk)), Seq(fk), "left_semi")
 
   /** Stats JSON mirroring `sync-app/src/sync.rs:618-637`. */
   def statsJson: String =

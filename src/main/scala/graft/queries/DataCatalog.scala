@@ -2894,6 +2894,9 @@ object DataCatalog {
       // so the three concurrent config jobs below can't race to compute
       // a shared lazy subtree.
       val truth = truth500Shared(s, d)
+      // the query panel likewise: built and counted once here, so the
+      // three walks read its cache instead of racing to fill it
+      Similarity.queryPanel(queries)
       val configs = Seq(
         ("a_base", 5, 2, 8, 64, 250),
         ("b_denser", 12, 3, 12, 64, 250),

@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   *    timing out), at most n batch streams at once via `coalesce(n)`
   *    (reference: ≤8 concurrent batches, `try_for_each_concurrent(8)` —
   *    a ceiling), per-batch retry with exponential backoff capped at
-  *    5 s (`mailchimp/src/lib.rs:331-364`).
+  *    5 s (`mailchimp/src/lib.rs:331-364`). Only transient failures
+  *    are retried: a [[AudienceSink.SinkHttpError]] with status 401, 403
+  *    or 404 is permanent (`mailchimp/src/lib.rs:352-361`,
+  *    `error.rs:54-70`), tried once, and fails the call.
   *  - S12 `retain`: delete audience rows whose id is NOT in the keep set,
   *    never touching `cleaned` members (`mailchimp/src/members.rs:68-97`).
   *    The keep set is a DataFrame and the doomed set is a distributed
@@ -41,15 +44,33 @@ object AudienceSink {
     /** member id → (email, status, merge-json). */
     val members = new ConcurrentHashMap[String, (String, String, String)]()
     val tags = new ConcurrentHashMap[String, Set[String]]()
-    /** injectable transient fault count (retry testing). */
+    /** injectable fault count (retry testing): the next n calls fail. */
     val failNextAttempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    /** HTTP status the injected faults carry; 0 (the default) injects a
+      * network error, a plain `IOException`. */
+    val failStatus = new java.util.concurrent.atomic.AtomicInteger(0)
+  }
+
+  /** A sink call answered with HTTP `status`. */
+  final class SinkHttpError(val status: Int, msg: String)
+      extends java.io.IOException(s"HTTP $status: $msg")
+
+  /** Statuses a retry cannot change (bad key, no permission, no such
+    * list); 5xx, 429 and network errors stay transient. */
+  private val PermanentStatuses: Set[Int] = Set(401, 403, 404)
+
+  private def transient(e: java.io.IOException): Boolean = e match {
+    case h: SinkHttpError => !PermanentStatuses(h.status)
+    case _ => true
   }
   private val registry = new ConcurrentHashMap[String, State]()
   def state(id: String): State = registry.computeIfAbsent(id, _ => new State)
 
   private def maybeFail(st: State): Unit =
-    if (st.failNextAttempts.getAndUpdate(n => math.max(0, n - 1)) > 0)
-      throw new java.io.IOException("transient sink error (injected)")
+    if (st.failNextAttempts.getAndUpdate(n => math.max(0, n - 1)) > 0) st.failStatus.get match {
+      case 0 => throw new java.io.IOException("transient sink error (injected)")
+      case status => throw new SinkHttpError(status, "injected")
+    }
 
   /** Transport boundary: a real implementation POSTs the batch here. */
   private[sink] def postBatch(sinkId: String,
@@ -81,19 +102,20 @@ object AudienceSink {
     }
   }
 
-  private[sink] def withRetry[T](maxRetries: Int)(f: => T): T = {
-    var delay = 50L
-    var tries = 0
-    while (tries <= maxRetries) {
-      try return f
-      catch {
-        case _: java.io.IOException if tries < maxRetries =>
-          tries += 1
-          Thread.sleep(math.min(delay, 5000)) // cap 5 s like the reference
-          delay *= 2
-      }
+  /** `f`, retried up to `retries` more times on a transient failure with
+    * doubling backoff capped at 5 s like the reference; a permanent
+    * failure, or the last transient one, propagates. */
+  @annotation.tailrec
+  private[sink] def withRetry[T](retries: Int, delayMs: Long = 50L)(f: => T): T = {
+    val outcome =
+      try Right(f)
+      catch { case e: java.io.IOException if retries > 0 && transient(e) => Left(e) }
+    outcome match {
+      case Right(v) => v
+      case Left(_) =>
+        Thread.sleep(math.min(delayMs, 5000L))
+        withRetry(retries - 1, delayMs * 2)(f)
     }
-    throw new IllegalStateException("retries exhausted")
   }
 }
 
@@ -107,8 +129,13 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
   def tagsOf(id: String): Set[String] =
     state(sinkId).tags.getOrDefault(id, Set.empty)
   def allIds: Set[String] = state(sinkId).members.keySet().asScala.toSet
-  def injectTransientFailures(n: Int): Unit =
+  def injectTransientFailures(n: Int): Unit = injectFailures(n, status = 0)
+  /** The next `n` sink calls fail with HTTP `status`, or with a network
+    * error when `status` is 0. */
+  def injectFailures(n: Int, status: Int): Unit = {
+    state(sinkId).failStatus.set(status)
     state(sinkId).failNextAttempts.set(n)
+  }
 
   /** The audience "list members" endpoint as a DataFrame (id, status).
     * The emulation snapshots the whole registry on the driver into a

@@ -212,4 +212,40 @@ class MultiJobSyncSpec extends AnyFunSuite {
       assert(gotB <= memberB, s"${job.name}: $gotB broadcasts, member plan has $memberB")
     }
   }
+
+  test("a warm audience build over a churned snapshot compiles no new code") {
+    // the build's JVM options reach the session: dropping the class-cache
+    // size (or a byte-stability setting) from build.sbt fails here
+    val src = scala.io.Source.fromFile("build.sbt", "UTF-8")
+    val opts = try "\"-D(spark\\.[\\w.]+)=([^\"]*)\"".r.findAllMatchIn(src.mkString)
+      .map(m => m.group(1) -> m.group(2)).toMap finally src.close()
+    assert(opts.get("spark.sql.codegen.cache.maxEntries").exists(_.toInt >= 1000),
+      s"build.sbt does not size the codegen cache: $opts")
+    for ((k, v) <- opts) assert(spark.conf.get(k) == v, k)
+
+    // a churned copy of the snapshot: customers leave, orders are re-dated
+    val churned = java.nio.file.Files.createTempDirectory("churned").toString
+    def copy(t: String)(f: DataFrame => DataFrame): Unit =
+      f(spark.read.parquet(s"$dir/$t.parquet")).write.parquet(s"$churned/$t.parquet")
+    copy("customer")(_.filter(col("c_custkey") % 29 =!= 0))
+    copy("orders")(o => o.withColumn("o_orderdate",
+      when(col("o_orderkey") % 13 === 0, date_add(col("o_orderdate"), 40))
+        .otherwise(col("o_orderdate"))))
+    copy("nation")(identity)
+    copy("region")(identity)
+
+    val jobs = Seq(SyncJob(1, "club-7", "x", club = Some(7L)),
+      SyncJob(2, "region-2", "x", region = Some(2L)), SyncJob(3, "all", "x"))
+    def compiles(d: String): (Long, Long) = {
+      val n0 = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val audience = MailSyncPipeline.audienceRows(spark, d, jobs)
+      val rows = audience.collect().length.toLong
+      (rows, org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0)
+    }
+    val (coldRows, _) = compiles(dir)
+    val (warmRows, warm) = compiles(churned)
+    assert(coldRows > 0 && warmRows > 0 && warmRows != coldRows)
+    // new data, same plans: every generated class is a cache hit
+    assert(warm == 0, s"the warm build compiled $warm classes")
+  }
 }

@@ -111,6 +111,34 @@ class SinkSourceSpec extends AnyFunSuite {
     assert(upserted == 100 && sink.size == 100)
   }
 
+  test("audience sink: 401/403/404 are tried once and fail the call; 5xx and network errors retry") {
+    val members = (0 until 20).map(i => (s"p$i", s"p$i@x.org", "subscribed", "{}"))
+      .toDF("id", "email", "status", "merge_json")
+    // one task, one batch: each sink call is exactly one attempt
+    def sink(id: String) = new AudienceSink(sinkId = id, batchSize = 50, sinkPartitions = 1)
+    for (status <- Seq(401, 403, 404)) {
+      val s = sink(s"t_perm_$status")
+      s.injectFailures(3, status)
+      val e = intercept[Exception](s.upsertMany(members))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains(s"HTTP $status")), s"$status: $e")
+      // tried once: two of the three injected faults are left unspent
+      assert(AudienceSink.state(s.sinkId).failNextAttempts.get == 2, s"$status retried")
+      assert(s.size == 0)
+    }
+    for (status <- Seq(500, 503, 0)) {
+      val s = sink(s"t_transient_$status")
+      s.injectFailures(3, status)
+      assert(s.upsertMany(members) == 20 && s.size == 20, s"$status")
+      assert(AudienceSink.state(s.sinkId).failNextAttempts.get == 0)
+    }
+    // a transient failure that outlasts the retries fails after 1 + 3 attempts
+    val s = sink("t_transient_exhausted")
+    s.injectFailures(5, 503)
+    intercept[Exception](s.upsertMany(members))
+    assert(AudienceSink.state(s.sinkId).failNextAttempts.get == 1)
+  }
+
   test("audience sink retain semantics mirror cleaned-exclusion") {
     val sink = new AudienceSink(sinkId = "t3")
     sink.upsertMany(Seq(
