@@ -17,15 +17,15 @@ import org.apache.spark.sql.DataFrame
   * [[releaseAll]] must only run at a point where NO query is still
   * building or executing — one driver thread sequencing queries
   * (Verify/Bench/Cli), or a fan-out driver calling it strictly after
-  * joining its workers (`MultiJobSync.run` releases after `syncMany`'s
-  * pool drains, never per-job). Calling it mid-build from another thread
+  * joining its workers (`MultiJobSync.run` releases after `syncMany`
+  * returns, never per-job). Calling it mid-build from another thread
   * would unpersist a live intermediate: results stay correct (Spark
   * recomputes from lineage) but the barrier the persist paid for is
   * lost. A frame that a fan-out driver shares among its workers is kept
   * out of this registry and owned by the driver call instead:
   * `MultiJobSync.syncMany` persists its one audience frame itself and
-  * unpersists it once its pool drains, so no release can drop it while a
-  * job still reads it. A long-lived server interleaving independent
+  * unpersists it once its sink passes end, so no release can drop it
+  * while a pass still reads it. A long-lived server interleaving independent
   * queries on many threads needs per-scope tokens instead of this
   * global registry — deliberately out of scope for the current drivers,
   * all of which sequence.

@@ -970,10 +970,9 @@ object Similarity {
       // and the fold aggregate alike. Partition count from the panel,
       // not the session (hopPartitions — three of these loops run
       // concurrently in sim11d's sweep).
-      // frontier broadcasts into the expansion join (walkLoop's r19
-      // move — the adjacency otherwise pays a SortMergeJoin per hop)
-      val reached = broadcast(frontier).join(adj, col("node_id") === col("src"))
-        .select(col("query_id"), col("dst").as("node_id"))
+      // the frontier broadcasts into the expansion join below the row
+      // bound ([[expand]], walkLoop's r19 move)
+      val reached = expand(frontier, adj, nQ, beam)
         .repartition(hopParts, col("query_id")).distinct()
         .localCheckpoint(false)
       dotsEvents = dotsEvents.unionByName(reached)
@@ -1165,6 +1164,27 @@ object Similarity {
       spark.sparkContext.defaultParallelism.toLong,
       (nQ * beam + (1L << 16) - 1) / (1L << 16))).toInt
 
+  /** Frontier rows (query panel × beam) up to which a hop broadcasts its
+    * frontier: about 32 MB of (query_id, node_id) rows. Above it the hop
+    * plans a plain join, as [[NearDup.maskSpans]] does above
+    * `MaskBroadcastMaxDocs`; the walk entry points do not bound the
+    * panel themselves (only `topK`'s `maxQueries` does). */
+  private[graft] val FrontierBroadcastMaxRows = 1000L * 1000
+
+  /** One hop's expansion: each frontier (query_id, node_id) joined to the
+    * node's adjacency edges, giving the reached (query_id, node_id). The
+    * frontier holds ≤ `nQ` × `beam` rows; up to `maxRows` it BROADCASTS
+    * (r19 opt, guide §3.1): the checkpointed adjacency reports unknown
+    * stats, so the planner otherwise picks a SortMergeJoin that shuffles
+    * and sorts the model-sized edge list every hop, while a broadcast
+    * frontier leaves adj in place. */
+  private[graft] def expand(frontier: DataFrame, adj: DataFrame, nQ: Long, beam: Int,
+      maxRows: Long = FrontierBroadcastMaxRows): DataFrame = {
+    val side = if (nQ * beam <= maxRows) broadcast(frontier) else frontier
+    side.join(adj, col("node_id") === col("src"))
+      .select(col("query_id"), col("dst").as("node_id"))
+  }
+
   private def walkLoop(adj: DataFrame, v: DataFrame, q: DataFrame, nQ: Long,
       visited0: DataFrame, k: Int, beam: Int, hops: Int): DataFrame = {
     val hopParts = hopPartitions(nQ, beam, q.sparkSession)
@@ -1175,15 +1195,9 @@ object Similarity {
       // (query_id, node_id) anyway, so the extra aggregate bought nothing
       // but an exchange (r18 opt: duplicates here are ≤ beam·degree rows
       // per query that score to identical cosines — the fold keeps one).
-      // The frontier side BROADCASTS into the expansion join (r19 opt,
-      // guide §3.1): the checkpointed adjacency reports unknown stats,
-      // so the planner picked a SortMergeJoin that shuffled + sorted the
-      // model-sized edge list EVERY hop. The frontier is ≤ panel × beam
-      // rows — panel-bounded by the recall protocol (Similarity.topK
-      // caps the query side at maxQueries), so the broadcast stays
-      // model-sized at any corpus scale while adj never moves.
-      val reached = broadcast(frontier).join(adj, col("node_id") === col("src"))
-        .select(col("query_id"), col("dst").as("node_id"))
+      // The frontier side broadcasts into the expansion join below the
+      // row bound ([[expand]]).
+      val reached = expand(frontier, adj, nQ, beam)
       val scoredHop = reached.join(v, Seq("node_id")).join(q, Seq("query_id"))
         .select(col("query_id"), col("node_id"),
           (dot(col("qv"), col("nv")) / (col("qn") * col("nn"))).as("cos"))

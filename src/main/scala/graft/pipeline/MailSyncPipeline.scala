@@ -9,20 +9,19 @@ import graft.operators.Dedup
   * `sync-mail/src/mailchimp.rs:238-290`, SURVEY §3.3):
   *
   *   scoped members (`Job::db_members`) → primary + partner rows (A9) →
-  *   validate emails (P10) → dedup (A6) → member id (F2), then per job
-  *   the merge-field render (F8), plus the member tag updates (F10).
+  *   validate emails (P10) → dedup (A6) → member id (F2), then each
+  *   row's merge-field render from its job's catalog (F8) and its member
+  *   tag updates (F10).
   *
   * Every job's rows come from ONE member assembly keyed by job: the
   * members carry the job's id as `scope` (one [[Members.Scope]] per job)
-  * and every step up to F8 is keyed by that scope. [[MultiJobSync]]
-  * persists the shared frame once per call and pushes each job's
-  * `scope` slice through its sink: S11 batch upsert → S12 retain
-  * (cleaned spared) → S13 tag updates.
+  * and every step is keyed by that scope. [[MultiJobSync]] persists the
+  * shared frame once per call and pushes every job's rows in one pass:
+  * S11 batch upsert with S13 tag updates, then one S12 retain (cleaned
+  * spared) for every job whose pass succeeded.
   */
 object MailSyncPipeline {
   import graft.queries.Members
-
-  final case class JobStats(upserted: Long, deleted: Long, tagOps: Long)
 
   /** Audience rows of every job in `jobs`, tagged with the job's id in
     * `scope`: each job's members are exactly the reference's
@@ -35,24 +34,27 @@ object MailSyncPipeline {
     memberAudienceRows(Members.scoped(spark, dir,
       jobs.map(j => Members.Scope(j.id, j.club, j.region))))
 
-  /** One job's audience rows: its `scope` slice of [[audienceRows]], with
-    * the merge JSON rendered from the job's declared catalog (club jobs
-    * use the club subset — `Job::merge_fields`, mailchimp.rs:182-189). */
-  def jobRows(audience: DataFrame, job: SyncJob): DataFrame = {
-    val catalog = if (job.club.isDefined) graft.sources.MergeFieldCatalog.club
-                  else graft.sources.MergeFieldCatalog.all
-    val rows = audience.filter(col("scope") === job.id)
-    rows.select(col("id"), col("email"), col("status"),
-      graft.functions.MergeFieldRender.mergeJson(rows, catalog, Map(
+  /** The rows [[MultiJobSync]] pushes for `jobs`: their `scope` rows of
+    * [[audienceRows]], each with the merge JSON rendered from its job's
+    * declared catalog (club jobs use the club subset — `Job::merge_fields`,
+    * mailchimp.rs:182-189) and its member tag updates in `tags` (F10). */
+  def jobRows(audience: DataFrame, jobs: Seq[SyncJob]): DataFrame = {
+    def render(catalog: Seq[graft.sources.MergeField]): Column =
+      graft.functions.MergeFieldRender.mergeJson(audience, catalog, Map(
         "NAME" -> col("name"), "JOINED" -> col("joined"), "BDAY" -> col("bday"),
-        "ROLE" -> col("role"), "SEGMENT" -> col("segment"))).as("merge_json"),
-      col("role"))
+        "ROLE" -> col("role"), "SEGMENT" -> col("segment")))
+    val clubJobs = jobs.filter(_.club.isDefined).map(_.id)
+    audience.filter(col("scope").isin(jobs.map(_.id): _*))
+      .select(col("scope"), col("id"), col("email"), col("status"),
+        when(col("scope").isin(clubJobs: _*), render(graft.sources.MergeFieldCatalog.club))
+          .otherwise(render(graft.sources.MergeFieldCatalog.all)).as("merge_json"),
+        col("role"), memberTags.as("tags"))
   }
 
   /** Audience rows of one job on its own: [[jobRows]] over a one-job
     * [[audienceRows]]. */
   def audienceRowsFor(spark: SparkSession, dir: String, job: SyncJob): DataFrame =
-    jobRows(audienceRows(spark, dir, Seq(job)), job)
+    jobRows(audienceRows(spark, dir, Seq(job)), Seq(job))
 
   /** Scope-tagged member rows → scope-tagged audience rows in one member
     * scan: each member row expands in place into its primary and
@@ -81,14 +83,11 @@ object MailSyncPipeline {
         col("name"), col("joined"), col("bday"), col("role"), col("segment"))
   }
 
-  /** Tag updates for member-based audience rows (F10): membership-kind
-    * tags mirror the reference's member/partner tagging (both partner
-    * rows get the same updates, ddb/src/members.rs:811-831). */
-  def memberTagUpdates(rows: DataFrame): DataFrame =
-    rows.select(col("id"), explode(array(
-        struct(lit("partner").as("tag"), (col("role") === "partner").as("active")),
-        struct(lit("affiliate").as("tag"), (col("role") === "affiliate").as("active")),
-        struct(lit("member").as("tag"), (col("role") === "regular").as("active"))))
-        .as("t"))
-      .select(col("id"), col("t.tag").as("tag"), col("t.active").as("active"))
+  /** F10: a row's membership-kind tag updates, mirroring the
+    * reference's member/partner tagging (both partner rows get the same
+    * updates, ddb/src/members.rs:811-831). */
+  private def memberTags: Column =
+    array(Seq("partner" -> "partner", "affiliate" -> "affiliate", "member" -> "regular").map {
+      case (tag, role) => struct(lit(tag).as("tag"), (col("role") === role).as("active"))
+    }: _*)
 }

@@ -1,14 +1,10 @@
 package graft.pipeline
 
-import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.util.{Failure, Success, Try}
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.sink.AudienceSink
 
@@ -65,26 +61,35 @@ object JobStore {
 }
 
 /** D4: the multi-job sync loop with per-job failure isolation —
-  * `Job::sync_many` (`sync-mail/src/mailchimp.rs:200-236`): up to 20
-  * jobs in flight, a failing job is recorded (and logged) but never
-  * aborts the rest, and results come back keyed by job id. Spark
-  * supports concurrent actions from multiple driver threads, so each
-  * job's sink pushes run as an independent Future over the shared
-  * session.
+  * `Job::sync_many` (`sync-mail/src/mailchimp.rs:200-236`): a failing
+  * job is recorded (and logged) but never aborts the rest, and results
+  * come back keyed by job id.
   *
   * One call reads one snapshot at one `asOf`, so its jobs share one
   * audience frame ([[MailSyncPipeline.audienceRows]], every job's rows
-  * tagged by job id): [[syncMany]] persists it, materializes it once
-  * before the pool starts, and unpersists it after the pool drains; each
-  * job reads only its own slice. The frame's lifetime is the call's, not
-  * [[graft.CacheScope]]'s. Failure isolation holds per job for its sink
-  * pushes; a failed shared build (say, a missing snapshot dir) fails
-  * every job of the call, each `JobResult` carrying the error, and
-  * touches no sink. */
+  * tagged by job id in `scope`). [[syncMany]] persists it, materializes
+  * it once, and unpersists it when the call ends; the frame's lifetime
+  * is the call's, not [[graft.CacheScope]]'s. The sink side is two
+  * keyed executor passes for every job at once, each row routed to its
+  * job's sink (`job-${list}`):
+  *
+  *  1. [[AudienceSink.upsertAndTag]] over [[MailSyncPipeline.jobRows]]:
+  *     S11 upserts, each batch followed by its S13 tag updates;
+  *  2. [[AudienceSink.retainAll]] for every job whose pass succeeded:
+  *     one registry snapshot keyed by scope, left-anti joined with the
+  *     audience's (scope, id), deleted in one pass (S12).
+  *
+  * The reference runs upsert → retain → tags per job; tagging before the
+  * retain ends in the same audience, because the retain deletes only ids
+  * that are not kept and the tags touch only kept ids. A job whose sink
+  * call fails for good carries that error and gets no retain; the other
+  * jobs are unaffected. A failed shared build (say, a missing snapshot
+  * dir) fails every job of the call, each `JobResult` carrying the
+  * error, and touches no sink. */
 object MultiJobSync {
 
   final case class JobResult(jobId: Long, name: String,
-      stats: Option[MailSyncPipeline.JobStats], error: Option[String]) {
+      stats: Option[AudienceSink.Stats], error: Option[String]) {
     /** D6 per-job stats line (serde-style: absent fields skipped). Names
       * and error messages are JSON-escaped — an exception text with a
       * quote or backslash must not emit a malformed stats line. */
@@ -118,51 +123,47 @@ object MultiJobSync {
     catch { case e: Throwable => audience.unpersist(); throw e }
   }
 
-  /** Push one job's slice of the shared audience frame through its
-    * list's sink: S11 upsert, S12 retain, S13 tag updates. */
-  private def pushJob(spark: SparkSession, audience: DataFrame,
-      job: SyncJob): MailSyncPipeline.JobStats = {
-    val sink = new AudienceSink(sinkId = s"job-${job.list}")
-    val rows = MailSyncPipeline.jobRows(audience, job)
-    val upserted = sink.upsertMany(rows)
-    val deleted = sink.retain(spark, rows.select("id"))
-    val tagOps = sink.updateTags(MailSyncPipeline.memberTagUpdates(rows))
-    MailSyncPipeline.JobStats(upserted, deleted, tagOps)
+  /** Both sink passes over the shared audience: per job, its stats or
+    * its error. */
+  private def push(spark: SparkSession, audience: DataFrame, jobs: Seq[SyncJob],
+      tasks: Int): Map[Long, Either[String, AudienceSink.Stats]] = {
+    val sinks = jobs.map(j => j.id -> s"job-${j.list}").toMap
+    val pass = AudienceSink.upsertAndTag(MailSyncPipeline.jobRows(audience, jobs), sinks, tasks)
+    val retained = sinks -- pass.errors.keys
+    val retain =
+      if (retained.isEmpty) AudienceSink.Pushed(Map.empty, Map.empty)
+      else AudienceSink.retainAll(spark, retained, audience.select("scope", "id"), tasks)
+    val errors = pass.errors ++ retain.errors
+    jobs.map { j =>
+      j.id -> errors.get(j.id).toLeft(
+        Seq(pass, retain).flatMap(_.stats.get(j.id)).foldLeft(AudienceSink.Stats())(_ + _))
+    }.toMap
   }
 
-  /** Run one job end-to-end against its list's sink: the [[syncMany]]
-    * path with one job, throwing its error. */
-  def runJob(spark: SparkSession, dir: String, job: SyncJob): MailSyncPipeline.JobStats = {
-    val audience = sharedAudience(spark, dir, Seq(job)).get
-    try pushJob(spark, audience, job) finally audience.unpersist()
+  /** [[syncMany]] with one job, throwing its error. */
+  def runJob(spark: SparkSession, dir: String, job: SyncJob): AudienceSink.Stats = {
+    val r = syncMany(spark, dir, Seq(job))(job.id)
+    r.stats.getOrElse(throw new RuntimeException(r.error.getOrElse("unknown")))
   }
 
+  /** Sync every job in `jobsIn`; `concurrency` caps the sink passes'
+    * task count, so at most that many pushes are in flight. */
   def syncMany(spark: SparkSession, dir: String, jobsIn: Seq[SyncJob],
       concurrency: Int = 20): Map[Long, JobResult] = {
     require(concurrency >= 1, s"syncMany concurrency must be >= 1, got $concurrency")
     if (jobsIn.isEmpty) return Map.empty
-    def result(job: SyncJob, outcome: Try[MailSyncPipeline.JobStats]): (Long, JobResult) =
-      outcome match {
-        case Success(stats) =>
-          job.id -> JobResult(job.id, job.name, Some(stats), None)
-        case Failure(e) =>
-          System.err.println(s"[sync] job ${job.id} '${job.name}' failed: ${e.getMessage}")
-          job.id -> JobResult(job.id, job.name, None,
-            Some(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
-      }
-    sharedAudience(spark, dir, jobsIn) match {
-      case Failure(e) => jobsIn.map(result(_, Failure(e))).toMap
-      case Success(audience) =>
-        val pool = Executors.newFixedThreadPool(math.min(concurrency, jobsIn.size))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try {
-          val futures = jobsIn.map(job => Future(result(job, Try(pushJob(spark, audience, job)))))
-          Await.result(Future.sequence(futures), Duration.Inf).toMap
-        } finally {
-          pool.shutdown()
-          audience.unpersist()
-        }
-    }
+    def message(e: Throwable) = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+    val outcomes = sharedAudience(spark, dir, jobsIn).flatMap { audience =>
+      try Try(push(spark, audience, jobsIn, concurrency)) finally audience.unpersist()
+    }.fold(e => jobsIn.map(_.id -> Left(message(e))).toMap, identity)
+    jobsIn.map { job =>
+      job.id -> (outcomes(job.id) match {
+        case Right(stats) => JobResult(job.id, job.name, Some(stats), None)
+        case Left(error) =>
+          System.err.println(s"[sync] job ${job.id} '${job.name}' failed: $error")
+          JobResult(job.id, job.name, None, Some(error))
+      })
+    }.toMap
   }
 
   /** The full `sync-mail run` surface: jobs table → sync_many →
@@ -172,7 +173,7 @@ object MultiJobSync {
     val results = syncMany(spark, dir, JobStore.fromDf(jobsDf), concurrency)
     results.toSeq.sortBy(_._1).foreach { case (_, r) => println(r.statsJson) }
     // syncMany has already unpersisted its shared audience frame; the
-    // per-query CacheScope release runs here, after the pool has drained
+    // per-query CacheScope release runs here, after it returns
     // (CacheScope's concurrency contract)
     graft.CacheScope.releaseAll()
     results

@@ -8,36 +8,40 @@ import org.apache.spark.sql.functions._
 
 /** Audience-style sink with the reference's Mailchimp semantics
   * (SURVEY §2.1 S11–S13), emulated over an in-JVM "service" so the
-  * batch/retry/GC protocol is testable without the network:
+  * batch/retry/GC protocol is testable without the network. Every push
+  * is keyed: each row carries a `scope` that routes it to one sink, so
+  * one executor pass serves every job of a `syncMany` call.
   *
-  *  - S11 `upsertMany`: members pushed from executors in chunks of ≤300
-  *    per batch (`mailchimp/src/members.rs:130-134` — 500 documented as
-  *    timing out), at most n batch streams at once via `coalesce(n)`
-  *    (reference: ≤8 concurrent batches, `try_for_each_concurrent(8)` —
-  *    a ceiling), per-batch retry with exponential backoff capped at
-  *    5 s (`mailchimp/src/lib.rs:331-364`). Only transient failures
-  *    are retried: a [[AudienceSink.SinkHttpError]] with status 401, 403
-  *    or 404 is permanent (`mailchimp/src/lib.rs:352-361`,
-  *    `error.rs:54-70`), tried once, and fails the call.
-  *  - S12 `retain`: delete audience rows whose id is NOT in the keep set,
-  *    never touching `cleaned` members (`mailchimp/src/members.rs:68-97`).
-  *    The keep set is a DataFrame and the doomed set is a distributed
-  *    anti-join (Merge.retainDeletes); deletes are pushed from executors
-  *    in batches. The anti-join's audience side is `membersDf`, which
-  *    in this emulation is a driver-side LocalRelation of the whole
-  *    registry, built on every `retain`; a production sink would read
-  *    the audience through a distributed paged scan instead, so that
-  *    the driver holds no member rows.
-  *  - S13 `updateTags`: per-member tag-state updates applied from
-  *    executors in chunks of 1000 (`mailchimp/src/members.rs:249-274`),
-  *    same partition-parallel shape as S11.
+  *  - S11 + S13 [[AudienceSink.upsertAndTag]]: each task posts a
+  *    member batch of ≤300 rows (`mailchimp/src/members.rs:130-134` —
+  *    500 documented as timing out), then that batch's tag updates in
+  *    chunks of ≤1000 (`members.rs:249-274`), so a member is never
+  *    tagged before it exists; the tag endpoint answers 404 for an
+  *    unknown member, as Mailchimp's does.
+  *  - S12 [[AudienceSink.retainAll]]: one snapshot of every given
+  *    registry, keyed by scope, cleaned members left out
+  *    (`members.rs:68-97`), left-anti joined with the keep set on
+  *    (scope, id); the doomed ids are deleted in the same kind of pass.
+  *    The snapshot is a driver-side LocalRelation fixed before the
+  *    deletes run; a production sink would page the "list members"
+  *    endpoint from executors instead (graft.sources.AudienceDataSource),
+  *    and would then have to materialize the doomed set before deleting,
+  *    since a live paged scan shifts its offsets under deletes.
+  *  - The class's `upsertMany`, `retain` and `updateTags` are the
+  *    one-sink case of the same loop.
   *
-  * All three run one executor push loop (`pushBatches`), whose closure
-  * captures only the sink id (a string) and stateless row/batch
-  * functions; state lives in a static registry — exactly where the real
-  * HTTP endpoint would sit. Every operation is keyed upsert/delete, so
-  * Spark task retries are idempotent (SURVEY §7.4.4). Swapping the
-  * registry calls for REST POSTs yields the production sink unchanged.
+  * The pass runs in at most `tasks` tasks (`coalesce`, no shuffle: the
+  * reference's `try_for_each_concurrent(8)` is likewise a ceiling).
+  * Every call goes through [[AudienceSink.withRetry]]: exponential
+  * backoff capped at 5 s (`mailchimp/src/lib.rs:331-364`), transient
+  * failures only; a [[AudienceSink.SinkHttpError]] with status 401,
+  * 403 or 404 is permanent (`lib.rs:352-361`, `error.rs:54-70`). A
+  * scope whose call fails for good is recorded with its error and its
+  * later rows in that task are skipped; other scopes go on (D4). The
+  * closure captures only sink ids and stateless functions; state lives
+  * in a static registry — exactly where the real HTTP endpoint would
+  * sit. Every operation is a keyed upsert or delete, so Spark task
+  * retries are idempotent (SURVEY §7.4.4).
   */
 object AudienceSink {
   final class State {
@@ -89,11 +93,16 @@ object AudienceSink {
     ids.foreach { id => st.members.remove(id); st.tags.remove(id) }
   }
 
-  /** Transport boundary for the S13 tag POST. */
+  /** Transport boundary for the S13 tag POST. Like Mailchimp's
+    * member-tags endpoint, it answers 404 for an id with no member; the
+    * whole batch is then rejected. */
   private[sink] def postTagBatch(sinkId: String,
       updates: Seq[(String, String, Boolean)]): Unit = {
     val st = state(sinkId)
     maybeFail(st)
+    updates.find(u => !st.members.containsKey(u._1)).foreach { case (id, _, _) =>
+      throw new SinkHttpError(404, s"no member $id in $sinkId")
+    }
     updates.foreach { case (id, tag, active) =>
       st.tags.compute(id, (_, cur) => {
         val s = Option(cur).getOrElse(Set.empty[String])
@@ -117,8 +126,105 @@ object AudienceSink {
         withRetry(retries - 1, delayMs * 2)(f)
     }
   }
+
+  /** What a push posted to one sink (the D6 per-job stats). */
+  final case class Stats(upserted: Long = 0L, deleted: Long = 0L, tagOps: Long = 0L) {
+    def +(o: Stats): Stats = Stats(upserted + o.upserted, deleted + o.deleted, tagOps + o.tagOps)
+  }
+
+  /** The outcome of one keyed push: what each scope posted, and an
+    * error for each scope whose posting failed. */
+  final case class Pushed(stats: Map[Long, Stats], errors: Map[Long, String])
+
+  /** Tag updates per tag POST (`members.rs:249-274`). */
+  private val TagChunk = 1000
+
+  /** The one executor push loop: `data` is coalesced to at most `tasks`
+    * tasks; each task groups its rows by scope (`decode`'s key) into
+    * batches of ≤`size` and hands each full batch, then each remainder,
+    * to `post`. A batch that throws (a permanent failure, or retries run
+    * out) records its scope's error, and the task skips that scope's
+    * later rows.
+    *
+    * The coalesce adds no shuffle, so the bound also applies to the
+    * stage that computes `data`; callers pass a cached frame or a small
+    * plan over one. The stats ride an accumulator inside the SAME pass
+    * that posts, so the input plan runs once; accumulator updates inside
+    * an action apply once per successful task, so task retries don't
+    * double-count. */
+  private def pushKeyed[T](data: DataFrame, tasks: Int, size: Int)(
+      decode: Row => (Long, T))(post: (Long, Seq[T]) => Stats): Pushed = {
+    val sc = data.sparkSession.sparkContext
+    val posted = sc.collectionAccumulator[(Long, Stats)]("audience_posted")
+    val failed = sc.collectionAccumulator[(Long, String)]("audience_failed")
+    data.coalesce(tasks).foreachPartition { rows: Iterator[Row] =>
+      val pending = scala.collection.mutable.LinkedHashMap.empty[Long, Vector[T]]
+      val sent = scala.collection.mutable.Map.empty[Long, Stats]
+      val dead = scala.collection.mutable.LinkedHashMap.empty[Long, String]
+      def flush(key: Long): Unit = {
+        try sent(key) = sent.getOrElse(key, Stats()) + post(key, pending(key))
+        catch { case scala.util.control.NonFatal(e) =>
+          dead(key) = Option(e.getMessage).getOrElse(e.getClass.getSimpleName) }
+        pending(key) = Vector.empty
+      }
+      rows.map(decode).foreach { case (key, item) =>
+        if (!dead.contains(key)) {
+          pending(key) = pending.getOrElse(key, Vector.empty) :+ item
+          if (pending(key).size >= size) flush(key)
+        }
+      }
+      for ((key, batch) <- pending.toSeq if batch.nonEmpty && !dead.contains(key)) flush(key)
+      sent.foreach(posted.add)
+      dead.foreach(failed.add)
+    }
+    Pushed(posted.value.asScala.toSeq.groupMapReduce(_._1)(_._2)(_ + _),
+      failed.value.asScala.toSeq.groupMapReduce(_._1)(_._2)((first, _) => first))
+  }
+
+  /** S11 + S13 in one pass: `rows` (scope, id, email, status,
+    * merge_json, tags: array<struct<tag, active>>) go to `sinks(scope)`,
+    * each member batch first, then its tag updates. */
+  def upsertAndTag(rows: DataFrame, sinks: Map[Long, String], tasks: Int,
+      batchSize: Int = 300, maxRetries: Int = 3): Pushed =
+    pushKeyed(rows.select("scope", "id", "email", "status", "merge_json", "tags"),
+        tasks, batchSize) { r =>
+      val id = r.getString(1)
+      r.getLong(0) -> ((id, r.getString(2), r.getString(3), r.getString(4)),
+        r.getSeq[Row](5).map(t => (id, t.getString(0), t.getBoolean(1))))
+    } { (scope, batch) =>
+      withRetry(maxRetries)(postBatch(sinks(scope), batch.map(_._1)))
+      val tags = batch.flatMap(_._2)
+      tags.grouped(TagChunk).foreach(c => withRetry(maxRetries)(postTagBatch(sinks(scope), c)))
+      Stats(upserted = batch.size, tagOps = tags.size)
+    }
+
+  /** The "list members" endpoint of every sink in `sinks` as one
+    * (scope, id) frame, cleaned members left out: one driver-side
+    * snapshot per call. */
+  private def snapshot(spark: SparkSession, sinks: Map[Long, String]): DataFrame = {
+    import spark.implicits._
+    sinks.toSeq.flatMap { case (scope, sid) =>
+      state(sid).members.asScala.iterator.collect {
+        case (id, (_, status, _)) if status != "cleaned" => (scope, id)
+      }
+    }.toDF("scope", "id")
+  }
+
+  /** S12 for every sink in `sinks` at once: the members of each scope's
+    * snapshot that are not in `keep` (scope, id) are deleted in one
+    * pass; cleaned members are spared. */
+  def retainAll(spark: SparkSession, sinks: Map[Long, String], keep: DataFrame,
+      tasks: Int, batchSize: Int = 300, maxRetries: Int = 3): Pushed = {
+    val doomed = graft.operators.Merge.retainDeletes(snapshot(spark, sinks), keep, Seq("scope", "id"))
+    pushKeyed(doomed, tasks, batchSize)(r => r.getLong(0) -> r.getString(1)) { (scope, ids) =>
+      withRetry(maxRetries)(deleteBatch(sinks(scope), ids))
+      Stats(deleted = ids.size)
+    }
+  }
 }
 
+/** One sink on its own: the keyed pushes with a single scope. A failed
+  * call throws its error. */
 final class AudienceSink(val sinkId: String, batchSize: Int = 300,
     sinkPartitions: Int = 8, maxRetries: Int = 3) extends Serializable {
   import AudienceSink._
@@ -137,64 +243,22 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
     state(sinkId).failNextAttempts.set(n)
   }
 
-  /** The audience "list members" endpoint as a DataFrame (id, status).
-    * The emulation snapshots the whole registry on the driver into a
-    * LocalRelation, so every call holds one row per member in driver
-    * memory. The sink does not read the paged DSv2 scan
-    * (graft.sources.AudienceDataSource); a production sink would page
-    * the endpoint from executors, as that source does, so no member
-    * rows reach the driver. */
-  def membersDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    state(sinkId).members.asScala.toSeq
-      .map { case (id, (_, status, _)) => (id, status) }
-      .toDF("id", "status")
-  }
-
-  /** The one executor push loop behind S11–S13: `data` is coalesced to
-    * at most `sinkPartitions` tasks (the bounded sink-side parallelism),
-    * each task posts its rows in ≤`size` batches, and every batch goes
-    * through [[AudienceSink.withRetry]]. Returns the rows posted.
-    *
-    * The coalesce adds no shuffle, so the bound also applies to the stage
-    * that computes `data`: it runs in at most `sinkPartitions` tasks.
-    * Callers therefore pass a cached frame (the mail-sync jobs push
-    * slices of their persisted audience frame; `retain` pushes its
-    * persisted doomed set), so the push reads the cache rather than
-    * recomputing a wide plan at reduced parallelism.
-    *
-    * The count rides a LongAccumulator inside the SAME pass that posts
-    * the batches, so the upstream plan executes once per sink call (a
-    * trailing `count()` would run the whole member transform a second
-    * time, and could diverge from what was actually posted for
-    * non-deterministic inputs). Accumulator updates inside an action are
-    * applied exactly once per successful task, so task retries don't
-    * double-count. */
-  private def pushBatches[T](data: DataFrame, size: Int, counter: String)(
-      decode: Row => T)(post: (String, Seq[T]) => Unit): Long = {
-    val (sid, retries) = (sinkId, maxRetries)
-    val sent = data.sparkSession.sparkContext.longAccumulator(counter)
-    data.coalesce(sinkPartitions).foreachPartition { it: Iterator[Row] =>
-      it.map(decode).grouped(size).foreach { batch =>
-        withRetry(retries)(post(sid, batch))
-        sent.add(batch.size)
-      }
-    }
-    sent.value
+  private def sinks = Map(0L -> sinkId)
+  private def scoped(df: DataFrame): DataFrame = df.withColumn("scope", lit(0L))
+  private def only(p: Pushed): Stats = {
+    p.errors.get(0L).foreach(e => throw new java.io.IOException(s"sink $sinkId: $e"))
+    p.stats.getOrElse(0L, Stats())
   }
 
   /** S11: df(id, email, status, merge_json) upserted in ≤batchSize
-    * chunks; returns the upserted count (stats only — the keep set for
-    * S12 stays a DataFrame on the caller's side). */
+    * chunks; returns the upserted count. */
   def upsertMany(df: DataFrame): Long =
-    pushBatches(df.select("id", "email", "status", "merge_json"), batchSize,
-        "audience_upserted") { r =>
-      (r.getString(0), r.getString(1), r.getString(2), r.getString(3))
-    }(postBatch)
+    only(upsertAndTag(scoped(df).withColumn("tags",
+        array().cast("array<struct<tag:string,active:boolean>>")),
+      sinks, sinkPartitions, batchSize, maxRetries)).upserted
 
   /** S12: delete members not in `keep` (a DataFrame of ids), excluding
-    * cleaned — the doomed set is a distributed anti-join and the deletes
-    * are executor-side batches. Returns the deleted count. */
+    * cleaned. Returns the deleted count. */
   def retain(spark: SparkSession, keep: DataFrame): Long = {
     val keepIds =
       if (keep.columns.contains("id")) keep.select("id")
@@ -203,25 +267,18 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
           s"retain keep-set needs an 'id' column or exactly one column, got ${keep.columns.mkString(",")}")
         keep.select(col(keep.columns.head).as("id"))
       }
-    val doomed = graft.operators.Merge.retainDeletes(
-        membersDf(spark), keepIds, Seq("id"),
-        exempt = Some(col("status") === "cleaned"))
-      .select("id").persist()
-    try {
-      // D6 stats; also materializes the doomed set before the deletes
-      // mutate the audience it is computed from (a live paged scan
-      // shifts its offsets under deletes)
-      val n = doomed.count()
-      pushBatches(doomed, batchSize, "audience_deleted")(_.getString(0))(deleteBatch)
-      n
-    } finally doomed.unpersist()
+    only(retainAll(spark, sinks, scoped(keepIds), sinkPartitions, batchSize, maxRetries)).deleted
   }
 
   /** S13: (id, tag, active) updates applied in chunks of 1000. Returns
-    * the number of tag operations, counted in the same single pass that
-    * posts them. */
-  def updateTags(updates: DataFrame): Long =
-    pushBatches(updates.select("id", "tag", "active"), 1000, "audience_tag_ops") { r =>
-      (r.getString(0), r.getString(1), r.getBoolean(2))
-    }(postTagBatch)
+    * the number of tag operations. */
+  def updateTags(updates: DataFrame): Long = {
+    val (sid, retries) = (sinkId, maxRetries)
+    only(pushKeyed(updates.select("id", "tag", "active"), sinkPartitions, TagChunk) { r =>
+      0L -> ((r.getString(0), r.getString(1), r.getBoolean(2)))
+    } { (_, chunk) =>
+      withRetry(retries)(postTagBatch(sid, chunk))
+      Stats(tagOps = chunk.size)
+    }).tagOps
+  }
 }

@@ -124,6 +124,94 @@ class MultiJobSyncSpec extends AnyFunSuite {
     }
   }
 
+  test("a 3-job syncMany pushes in one pass: few Spark jobs after the build, one registry snapshot") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.logical.Range
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    // listener events arrive asynchronously, in order within each
+    // listener: a marker query run before and after the call brackets the
+    // call's own events
+    val sites = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val (jobMarkers, planMarkers) =
+      (new java.util.concurrent.atomic.AtomicInteger(), new java.util.concurrent.atomic.AtomicInteger())
+    val jobListener = new SparkListener {
+      // a job's call site is its SQL execution's ("<action> at
+      // <File>:<line>"); jobs that AQE submits from its own threads carry
+      // only the execution id
+      private val execSite = new java.util.concurrent.ConcurrentHashMap[String, String]()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execSite.put(s.executionId.toString, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val site = Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSite.get(id))).getOrElse("")
+        if (site.contains("MultiJobSyncSpec")) jobMarkers.incrementAndGet() else sites.add(site)
+      }
+    }
+    val planListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.exists { case r: Range => r.end == 1717; case _ => false })
+          planMarkers.incrementAndGet()
+        else plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def marker(n: Int): Unit = {
+      val jobsBefore = jobMarkers.get
+      spark.range(0, 1717).filter(col("id") % 7 === 0).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((planMarkers.get < n || jobMarkers.get == jobsBefore) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(planMarkers.get == n && jobMarkers.get > jobsBefore,
+        s"the marker query's events did not arrive: ${sites.asScala.mkString("; ")}")
+    }
+    val jobs = Seq(SyncJob(1, "club-7", "mj-pass1", club = Some(7L)),
+      SyncJob(2, "region-2", "mj-pass2", region = Some(2L)), SyncJob(3, "all", "mj-pass3"))
+    // a first call fills the sinks, so the measured call retains against
+    // populated registries, as a warm cycle does
+    MultiJobSync.syncMany(spark, dir, jobs, concurrency = 3)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val results = try {
+      marker(1)
+      sites.clear(); plans.clear()
+      val r = MultiJobSync.syncMany(spark, dir, jobs, concurrency = 3)
+      marker(2)
+      r
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    assert(results.values.forall(r => r.error.isEmpty && r.stats.exists(_.upserted > 0)),
+      results.values.map(_.statsJson).mkString("\n"))
+    val all = sites.asScala.toSeq
+    val build = all.lastIndexWhere(_.startsWith("count at MultiJobSync.scala"))
+    assert(build >= 0, s"the shared build's jobs were not seen: $all")
+    val sink = all.drop(build + 1)
+    assert(sink.nonEmpty && sink.size <= 5,
+      s"${sink.size} Spark jobs after the shared build:\n${sink.mkString("\n")}")
+    // the retain's registry snapshot is the only local relation of ids,
+    // also inside a cached frame
+    val snapshots = plans.asScala.toSeq.map(p => nodes(p).count {
+      case l: LocalTableScanExec => l.output.exists(_.name == "id")
+      case _ => false
+    }).sum
+    assert(snapshots == 1, s"the call's plans scan $snapshots registry snapshots")
+  }
+
   test("a failed shared build fails every job of the call and touches no sink") {
     import spark.implicits._
     val jobs = Seq(SyncJob(1, "club-7", "mj-nodir1", club = Some(7L)),
@@ -156,7 +244,7 @@ class MultiJobSyncSpec extends AnyFunSuite {
       lit("Bob").as("partner_first_name"), lit("L").as("partner_last_name"),
       lit(null).cast("date").as("partner_birthday"))
     val rows = MailSyncPipeline.jobRows(MailSyncPipeline.memberAudienceRows(members),
-      SyncJob(1, "all", "x")).collect()
+      Seq(SyncJob(1, "all", "x"))).collect()
     assert(rows.length == 80 && rows.count(_.getAs[String]("role") == "partner") == 40)
     assert(evals.value == 40, s"member rows evaluated ${evals.value} times, expected 40")
   }

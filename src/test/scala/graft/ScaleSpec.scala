@@ -372,6 +372,39 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
+  test("walk hop size-guard: the frontier broadcasts up to its row bound, and joins plainly above it") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import graft.operators.Similarity
+    // 2 queries × beam 3 = 6 frontier rows, each node with two edges
+    val frontier = spark.range(0, 6).select((col("id") % 2).as("query_id"), col("id").as("node_id"))
+    val adj = spark.range(0, 12).select((col("id") % 6).as("src"), (col("id") + 100).as("dst"))
+    // auto-broadcast off on both planners: a broadcast hash join can only
+    // come from expand's hint
+    val savedStatic = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    val savedAqe = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
+    def restore(key: String, v: Option[String]): Unit =
+      v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      val at = Similarity.expand(frontier, adj, nQ = 2, beam = 3, maxRows = 6)
+      val over = Similarity.expand(frontier, adj, nQ = 2, beam = 3, maxRows = 5)
+      val default = Similarity.expand(frontier, adj, nQ = 2, beam = 3)
+      assert(at.count() == 12 && over.count() == 12)
+      assert(nodes(at).exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        "at the bound the frontier must broadcast")
+      assert(nodes(default).exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        "a catalog-sized panel must stay under the default bound")
+      assert(!nodes(over).exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        "over the bound the expansion join must not be forced to broadcast")
+      assert(at.exceptAll(over).isEmpty && over.exceptAll(at).isEmpty,
+        "both join strategies must reach the same nodes")
+    } finally {
+      restore("spark.sql.autoBroadcastJoinThreshold", savedStatic)
+      restore("spark.sql.adaptive.autoBroadcastJoinThreshold", savedAqe)
+    }
+  }
+
   test("real media pipelines: payload bytes never ride a shuffle — only fingerprints leave the decode tasks") {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import graft.operators.Multimodal

@@ -139,6 +139,38 @@ class SinkSourceSpec extends AnyFunSuite {
     assert(AudienceSink.state(s.sinkId).failNextAttempts.get == 1)
   }
 
+  test("audience sink: a tag for an id with no member is rejected with 404") {
+    val sink = new AudienceSink(sinkId = "t_tag404", sinkPartitions = 1)
+    sink.upsertMany(Seq(("a", "a@x.org", "subscribed", "{}")).toDF("id", "email", "status", "merge_json"))
+    val e = intercept[Exception](sink.updateTags(
+      Seq(("a", "member", true), ("b", "member", true)).toDF("id", "tag", "active")))
+    assert(e.getMessage.contains("HTTP 404"), e)
+    // the batch is rejected whole: the known member is not tagged either
+    assert(sink.tagsOf("a").isEmpty)
+    assert(sink.updateTags(Seq(("a", "member", true)).toDF("id", "tag", "active")) == 1)
+    assert(sink.tagsOf("a") == Set("member"))
+  }
+
+  test("audience sink: a pass that tagged before upserting would fail; upsertAndTag posts members first") {
+    val rows = (0 until 25).map(i => (f"n$i%03d", s"n$i@x.org", "subscribed", "{}", i % 2 == 0))
+      .toDF("id", "email", "status", "merge_json", "even")
+    // tags first: every tag names a member the registry does not hold yet
+    val tagFirst = new AudienceSink(sinkId = "t_tag_first", batchSize = 10, sinkPartitions = 2)
+    val e = intercept[Exception](tagFirst.updateTags(
+      rows.select(col("id"), lit("even").as("tag"), col("even").as("active"))))
+    assert(e.getMessage.contains("HTTP 404"), e)
+    assert(tagFirst.size == 0)
+    // the fused pass posts each member batch, then that batch's tags
+    val fused = AudienceSink.upsertAndTag(
+      rows.select(lit(7L).as("scope"), col("*"),
+        array(struct(lit("even").as("tag"), col("even").as("active"))).as("tags")),
+      Map(7L -> "t_fused"), tasks = 2, batchSize = 10)
+    assert(fused.errors.isEmpty, fused.errors)
+    assert(fused.stats == Map(7L -> AudienceSink.Stats(upserted = 25, tagOps = 25)))
+    val sink = new AudienceSink("t_fused")
+    assert(sink.size == 25 && sink.tagsOf("n000") == Set("even") && sink.tagsOf("n001").isEmpty)
+  }
+
   test("audience sink retain semantics mirror cleaned-exclusion") {
     val sink = new AudienceSink(sinkId = "t3")
     sink.upsertMany(Seq(
