@@ -1173,14 +1173,14 @@ object Similarity {
 
   /** One hop's expansion: each frontier (query_id, node_id) joined to the
     * node's adjacency edges, giving the reached (query_id, node_id). The
-    * frontier holds ≤ `nQ` × `beam` rows; up to `maxRows` it BROADCASTS
+    * frontier holds ≤ `nQ` × `beam` rows; up to [[FrontierBroadcastMaxRows]]
+    * it BROADCASTS
     * (r19 opt, guide §3.1): the checkpointed adjacency reports unknown
     * stats, so the planner otherwise picks a SortMergeJoin that shuffles
     * and sorts the model-sized edge list every hop, while a broadcast
     * frontier leaves adj in place. */
-  private[graft] def expand(frontier: DataFrame, adj: DataFrame, nQ: Long, beam: Int,
-      maxRows: Long = FrontierBroadcastMaxRows): DataFrame = {
-    val side = if (nQ * beam <= maxRows) broadcast(frontier) else frontier
+  private[graft] def expand(frontier: DataFrame, adj: DataFrame, nQ: Long, beam: Int): DataFrame = {
+    val side = if (nQ * beam <= FrontierBroadcastMaxRows) broadcast(frontier) else frontier
     side.join(adj, col("node_id") === col("src"))
       .select(col("query_id"), col("dst").as("node_id"))
   }

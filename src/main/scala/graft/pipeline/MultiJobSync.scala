@@ -81,11 +81,21 @@ object JobStore {
   *
   * The reference runs upsert → retain → tags per job; tagging before the
   * retain ends in the same audience, because the retain deletes only ids
-  * that are not kept and the tags touch only kept ids. A job whose sink
-  * call fails for good carries that error and gets no retain; the other
-  * jobs are unaffected. A failed shared build (say, a missing snapshot
-  * dir) fails every job of the call, each `JobResult` carrying the
-  * error, and touches no sink. */
+  * that are not kept and the tags touch only kept ids.
+  *
+  * Both passes run in at most min(`concurrency`, 8 × jobs) tasks: one
+  * job keeps the reference's ceiling of eight pushes in flight to its
+  * list ([[AudienceSink.ListConcurrency]]); with several jobs the bound
+  * is on the whole pass, not on each list.
+  *
+  * A job whose sink call fails for good carries that error and gets no
+  * retain; the other jobs are unaffected. A failure of the retain
+  * itself (its snapshot, join or a task) fails the jobs it covered and
+  * leaves the others' upsert-pass errors as they were. A failure of the
+  * upsert pass itself, outside a sink call (a task or stage failure),
+  * fails every job of the call, as does a failed shared build (say, a
+  * missing snapshot dir), each `JobResult` carrying the error; a failed
+  * build touches no sink. */
 object MultiJobSync {
 
   final case class JobResult(jobId: Long, name: String,
@@ -132,7 +142,8 @@ object MultiJobSync {
     val retained = sinks -- pass.errors.keys
     val retain =
       if (retained.isEmpty) AudienceSink.Pushed(Map.empty, Map.empty)
-      else AudienceSink.retainAll(spark, retained, audience.select("scope", "id"), tasks)
+      else Try(AudienceSink.retainAll(spark, retained, audience.select("scope", "id"), tasks))
+        .fold(e => AudienceSink.Pushed(Map.empty, retained.map(_._1 -> message(e))), identity)
     val errors = pass.errors ++ retain.errors
     jobs.map { j =>
       j.id -> errors.get(j.id).toLeft(
@@ -146,15 +157,18 @@ object MultiJobSync {
     r.stats.getOrElse(throw new RuntimeException(r.error.getOrElse("unknown")))
   }
 
+  private def message(e: Throwable) = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+
   /** Sync every job in `jobsIn`; `concurrency` caps the sink passes'
-    * task count, so at most that many pushes are in flight. */
+    * task count, so at most that many pushes are in flight across all
+    * the jobs' lists; the pass takes at most eight tasks per job. */
   def syncMany(spark: SparkSession, dir: String, jobsIn: Seq[SyncJob],
       concurrency: Int = 20): Map[Long, JobResult] = {
     require(concurrency >= 1, s"syncMany concurrency must be >= 1, got $concurrency")
     if (jobsIn.isEmpty) return Map.empty
-    def message(e: Throwable) = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
+    val tasks = math.min(concurrency, AudienceSink.ListConcurrency * jobsIn.size)
     val outcomes = sharedAudience(spark, dir, jobsIn).flatMap { audience =>
-      try Try(push(spark, audience, jobsIn, concurrency)) finally audience.unpersist()
+      try Try(push(spark, audience, jobsIn, tasks)) finally audience.unpersist()
     }.fold(e => jobsIn.map(_.id -> Left(message(e))).toMap, identity)
     jobsIn.map { job =>
       job.id -> (outcomes(job.id) match {

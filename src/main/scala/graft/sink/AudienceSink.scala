@@ -30,8 +30,10 @@ import org.apache.spark.sql.functions._
   *  - The class's `upsertMany`, `retain` and `updateTags` are the
   *    one-sink case of the same loop.
   *
-  * The pass runs in at most `tasks` tasks (`coalesce`, no shuffle: the
-  * reference's `try_for_each_concurrent(8)` is likewise a ceiling).
+  * The pass runs in at most `tasks` tasks (`coalesce`, no shuffle), so
+  * at most `tasks` calls are in flight across all its sinks. The
+  * reference's ceiling is per list, `try_for_each_concurrent(8)`
+  * ([[AudienceSink.ListConcurrency]]); a one-sink push keeps it.
   * Every call goes through [[AudienceSink.withRetry]]: exponential
   * backoff capped at 5 s (`mailchimp/src/lib.rs:331-364`), transient
   * failures only; a [[AudienceSink.SinkHttpError]] with status 401,
@@ -136,8 +138,21 @@ object AudienceSink {
     * error for each scope whose posting failed. */
   final case class Pushed(stats: Map[Long, Stats], errors: Map[Long, String])
 
+  /** Calls in flight to one list in the reference
+    * (`try_for_each_concurrent(8)`, `members.rs:151`). */
+  val ListConcurrency = 8
+
   /** Tag updates per tag POST (`members.rs:249-274`). */
   private val TagChunk = 1000
+
+  /** S13: `updates` (id, tag, active) posted to `sinkId` in chunks of
+    * ≤[[TagChunk]], each chunk retried on its own; returns the number of
+    * tag operations. */
+  private def postTags(sinkId: String, updates: Seq[(String, String, Boolean)],
+      retries: Int): Long = {
+    updates.grouped(TagChunk).foreach(c => withRetry(retries)(postTagBatch(sinkId, c)))
+    updates.size
+  }
 
   /** The one executor push loop: `data` is coalesced to at most `tasks`
     * tasks; each task groups its rows by scope (`decode`'s key) into
@@ -193,9 +208,7 @@ object AudienceSink {
         r.getSeq[Row](5).map(t => (id, t.getString(0), t.getBoolean(1))))
     } { (scope, batch) =>
       withRetry(maxRetries)(postBatch(sinks(scope), batch.map(_._1)))
-      val tags = batch.flatMap(_._2)
-      tags.grouped(TagChunk).foreach(c => withRetry(maxRetries)(postTagBatch(sinks(scope), c)))
-      Stats(upserted = batch.size, tagOps = tags.size)
+      Stats(upserted = batch.size, tagOps = postTags(sinks(scope), batch.flatMap(_._2), maxRetries))
     }
 
   /** The "list members" endpoint of every sink in `sinks` as one
@@ -226,7 +239,7 @@ object AudienceSink {
 /** One sink on its own: the keyed pushes with a single scope. A failed
   * call throws its error. */
 final class AudienceSink(val sinkId: String, batchSize: Int = 300,
-    sinkPartitions: Int = 8, maxRetries: Int = 3) extends Serializable {
+    sinkPartitions: Int = AudienceSink.ListConcurrency, maxRetries: Int = 3) extends Serializable {
   import AudienceSink._
 
   def size: Int = state(sinkId).members.size
@@ -276,9 +289,6 @@ final class AudienceSink(val sinkId: String, batchSize: Int = 300,
     val (sid, retries) = (sinkId, maxRetries)
     only(pushKeyed(updates.select("id", "tag", "active"), sinkPartitions, TagChunk) { r =>
       0L -> ((r.getString(0), r.getString(1), r.getBoolean(2)))
-    } { (_, chunk) =>
-      withRetry(retries)(postTagBatch(sid, chunk))
-      Stats(tagOps = chunk.size)
-    }).tagOps
+    } { (_, chunk) => Stats(tagOps = postTags(sid, chunk, retries)) }).tagOps
   }
 }

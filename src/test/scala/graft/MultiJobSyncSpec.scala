@@ -101,6 +101,52 @@ class MultiJobSyncSpec extends AnyFunSuite {
     assert(e.getMessage.contains("concurrency"))
   }
 
+  test("syncMany's sink passes take at most eight tasks per job and at most `concurrency`") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    // stage events arrive asynchronously, in order: a marker stage run
+    // after the calls closes their events
+    val pushTasks = new ConcurrentLinkedQueue[Int]()
+    val marked = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        val name = e.stageInfo.name
+        if (name.contains("AudienceSink")) pushTasks.add(e.stageInfo.numTasks)
+        else if (name.contains("MultiJobSyncSpec")) marked.set(true)
+      }
+    }
+    // an audience frame of 32 partitions, so the cap, not the frame,
+    // bounds the passes' tasks
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.sparkContext.addSparkListener(listener)
+    def tasksOf(jobs: Seq[SyncJob], concurrency: Int): Seq[Int] = {
+      pushTasks.clear(); marked.set(false)
+      val r = MultiJobSync.syncMany(spark, dir, jobs, concurrency)
+      assert(r.values.forall(_.error.isEmpty), r.values.map(_.statsJson).mkString("\n"))
+      spark.sparkContext.parallelize(1 to 3, 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!marked.get && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(marked.get, "the marker stage's event did not arrive")
+      pushTasks.asScala.toSeq
+    }
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "32")
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val one = tasksOf(Seq(SyncJob(1, "all", "mj-cap1")), concurrency = 20)
+      assert(one.nonEmpty && one.max == AudienceSink.ListConcurrency,
+        s"a one-job call keeps the reference's 8 pushes per list: $one")
+      val three = tasksOf(Seq(SyncJob(1, "club-7", "mj-cap2", club = Some(7L)),
+        SyncJob(2, "region-2", "mj-cap3", region = Some(2L)), SyncJob(3, "all", "mj-cap4")),
+        concurrency = 20)
+      assert(three.nonEmpty && three.max == 20, s"three jobs share the concurrency bound: $three")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+  }
+
   test("a 3-job syncMany evaluates the member assembly once") {
     import graft.queries.{DrupalFixture, Members}
     // the assembly reads the region base once (its region-number

@@ -387,17 +387,20 @@ class ScaleSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val at = Similarity.expand(frontier, adj, nQ = 2, beam = 3, maxRows = 6)
-      val over = Similarity.expand(frontier, adj, nQ = 2, beam = 3, maxRows = 5)
-      val default = Similarity.expand(frontier, adj, nQ = 2, beam = 3)
+      // nQ feeds only the guard, so the same small frontier can stand on
+      // either side of the bound
+      val bound = Similarity.FrontierBroadcastMaxRows
+      val panel = Similarity.expand(frontier, adj, nQ = 2, beam = 3)
+      val at = Similarity.expand(frontier, adj, nQ = bound, beam = 1)
+      val over = Similarity.expand(frontier, adj, nQ = bound + 1, beam = 1)
       assert(at.count() == 12 && over.count() == 12)
+      assert(nodes(panel).exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        "a catalog-sized panel must stay under the bound")
       assert(nodes(at).exists(_.isInstanceOf[BroadcastHashJoinExec]),
         "at the bound the frontier must broadcast")
-      assert(nodes(default).exists(_.isInstanceOf[BroadcastHashJoinExec]),
-        "a catalog-sized panel must stay under the default bound")
       assert(!nodes(over).exists(_.isInstanceOf[BroadcastHashJoinExec]),
         "over the bound the expansion join must not be forced to broadcast")
-      assert(at.exceptAll(over).isEmpty && over.exceptAll(at).isEmpty,
+      assert(panel.exceptAll(over).isEmpty && over.exceptAll(panel).isEmpty,
         "both join strategies must reach the same nodes")
     } finally {
       restore("spark.sql.autoBroadcastJoinThreshold", savedStatic)
